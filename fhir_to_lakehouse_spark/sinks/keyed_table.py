@@ -104,7 +104,6 @@ class KeyedTable:
         spark: SparkSession,
         path: str,
         key: str = "id",
-        sort_on_write: bool = True,
         changelog: bool = False,
         verify_unique_source: bool = True,
         table_properties: dict[str, str] | None = None,
@@ -137,10 +136,6 @@ class KeyedTable:
         # MERGE would. Callers that provably dedup first (the pipeline's
         # latest_per_key) may disable to skip the probe job.
         self.verify_unique_source = verify_unique_source
-        # fallback-path analog of Delta optimizeWrite/liquid clustering:
-        # sorting by key within partitions tightens per-file min/max
-        # statistics, so later key lookups and merge joins skip files
-        self.sort_on_write = sort_on_write
         # Change Data Feed analog (delta.enableChangeDataFeed): every
         # merge also appends its row-level changes (_change_type +
         # commit_version) to <path>.changelog for incremental consumers
@@ -161,13 +156,6 @@ class KeyedTable:
             if table_properties is not None
             else dict(self.DEFAULT_TABLE_PROPERTIES)
         )
-
-    @property
-    def is_delta(self) -> bool:
-        """True when this table runs on the Delta backend (callers that
-        piggyback work on merge jobs need to know which engine plans
-        the merge)."""
-        return self._delta
 
     # -- existence / read ------------------------------------------------
 
@@ -314,8 +302,8 @@ class KeyedTable:
         # not self.spark: inside a streaming foreachBatch the batch df
         # belongs to the stream's CLONED session, and a merge plan
         # rooted on a self.spark read would execute under the original
-        # session's UUID — so a listener registered on the clone (the
-        # pipeline's Observation counts) never sees the completion
+        # session's UUID — so a listener registered on the clone (an
+        # Observation on the source, say) never sees the completion
         # event and Observation.get blocks forever (reproduced:
         # test_recovery_processes_only_new_data_after_commit hung on
         # the first post-create merge). Executing the whole merge in
@@ -705,7 +693,11 @@ class KeyedTable:
         ever lost."""
         self._known_empty = False
         suffix = f".tmp-{uuid.uuid4().hex[:8]}"
-        if not presorted and self.sort_on_write and self.key in df.columns:
+        if not presorted and self.key in df.columns:
+            # sorted by key within each file: tight min/max statistics
+            # (and row groups) INSIDE a file. Plain parquet has no
+            # file-level key index, so a point lookup still opens every
+            # file of the table; only Delta's data skipping prunes files
             df = df.sortWithinPartitions(self.key)
         # Spark writes via the URI form; the renames below are plain
         # filesystem moves on the local equivalent

@@ -228,11 +228,16 @@ class HistogramSnapshot:
                 s["min"] = min(s["min"], value)
                 s["max"] = max(s["max"], value)
 
+    # readers get copies taken under the lock: a live dict would change
+    # (or fail to iterate) while a pool thread observes into it
     def get(self, metric: str, **labels: str) -> dict[str, float] | None:
-        return self._series.get((metric, _labels(**labels)))
+        with self._lock:
+            s = self._series.get((metric, _labels(**labels)))
+            return dict(s) if s is not None else None
 
-    def items(self):
-        return self._series.items()
+    def items(self) -> list[tuple[tuple[str, Labels], dict[str, float]]]:
+        with self._lock:
+            return [(k, dict(v)) for k, v in self._series.items()]
 
 
 class MeasureElapsed:

@@ -1,18 +1,24 @@
 """Micro-batch pipeline orchestration (foreachBatch core + stream shell).
 
 Reference parity: process_batch / _process_df_of_single_resource_type
-(/root/reference/src/bundle_processor.py:79-238) — dedup, encode,
-upsert, delete, periodic upkeep — with the documented inefficiencies
-fixed (SURVEY §4 "known physical inefficiencies"):
+(the reference's src/bundle_processor.py:79-238) — dedup, encode,
+upsert, delete, periodic upkeep — as one micro-batch sink:
 
 - ONE streaming query, not N+1: the reference starts a query per hot
   resource type, each re-reading and re-parsing the whole Kafka stream
-  (/root/reference/src/main.py:119-124 documents the starvation risk).
-  We filter per type inside one foreachBatch over one cached batch.
-- ONE pass of actions: the batch is cached; count() runs once, the
-  per-type loop reuses the cache (reference re-counts 4× per batch at
-  :82, :229, :248, :279).
-- Table handles are cached across batches (reference re-runs
+  (its src/main.py:119-124 documents the starvation risk). Here every
+  type is routed inside one foreachBatch.
+- Two caches per batch: the envelope parse, and the winners of ONE
+  batch-wide last-writer-wins dedup keyed by request_url (``<type>/<id>``,
+  so it equals a per-type dedup), flagged ``invalid`` where a PUT's
+  resource has no parseable id.
+- One count: a single groupBy(resource_type, request_method, invalid)
+  over the winners gives the exact numbers behind every write decision
+  (merge, delete, dead-letter), so no per-type probe job runs (the
+  reference re-counts 4x per batch, :82, :229, :248, :279).
+- The types of a batch maintain disjoint tables, so a small driver
+  thread pool runs them side by side over the shared caches.
+- Table handles are cached across batches (the reference re-runs
   createIfNotExists + detail() every batch; its own `XXX: not necessary
   for every batch` at :211).
 """
@@ -20,15 +26,17 @@ fixed (SURVEY §4 "known physical inefficiencies"):
 from __future__ import annotations
 
 import os
+import threading
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fhir_to_lakehouse_spark.operators.bundles import (
     encode_resources,
     latest_per_key,
-    prepare_stream,
     split_by_method,
 )
 from fhir_to_lakehouse_spark.sinks.keyed_table import KeyedTable
@@ -38,9 +46,17 @@ from fhir_to_lakehouse_spark.streaming.metrics import (
     MeasureElapsed,
 )
 
+# resource types of one batch processed at once (2-3 in flight is
+# plenty to fill the executors between one type's jobs)
+TYPE_POOL_SIZE = 3
+
 
 @dataclass
 class PipelineConfig:
+    """Settings of one BundlePipeline. Every batch runs the same shape
+    whatever is set here: one parse cache, one winners cache, one count;
+    the options below add work only where their comment says so."""
+
     warehouse_dir: str = "/tmp/fhir-warehouse"
     checkpoint_dir: str = "/tmp/fhir-checkpoints"
     # reference settings.py:39 — OPTIMIZE+VACUUM every N batches
@@ -54,8 +70,11 @@ class PipelineConfig:
             "Observation": ["id"],
         }
     )
+    # print each batch's winners per (type, method, invalid) — the
+    # counts the batch already collected, so no extra job
     log_batch_stats: bool = False
-    # reference settings: log_resource_count_by_source_topic
+    # reference settings: log_resource_count_by_source_topic — one
+    # groupBy(resource_type, topic) job over the winners per batch
     log_topic_counts: bool = False
     # reference: register tables in the catalog when metastore configured
     register_schema: str | None = None
@@ -80,7 +99,8 @@ class PipelineConfig:
     # extensions.
     encode_extensions: bool = False
     # profile-validation specs (operators/validation.py), applied to
-    # each batch's encoded PUT rows for their resource type: per-rule
+    # each batch's encoded valid PUT rows for their resource type (the
+    # rows the merge writes; invalid ones are dead-lettered): per-rule
     # violation/checked counts accumulate on
     # BundlePipeline.validation_stats (data-quality monitoring inside
     # the ETL — one extra map-side-combinable aggregate per matching
@@ -88,18 +108,6 @@ class PipelineConfig:
     # `validation_valuesets` (an expand_valueset frame).
     validation_specs: list[dict] = field(default_factory=list)
     validation_valuesets: object | None = None
-    # Per-type processing concurrency (guide §2.6 overlap of
-    # independent jobs): the resource types in a batch maintain
-    # DISJOINT tables, so their dedup/encode/merge job chains are
-    # independent — running them from a small driver thread pool lets
-    # one type's job tail back-fill executors the previous type would
-    # have left idle. The reference gets this concurrency by running
-    # one streaming query PER type (at N× the parse cost and with
-    # documented starvation risk, /root/reference/src/main.py:119-124);
-    # a pool over one cached parse keeps its concurrency without its
-    # redundancy. 2-3 in flight is plenty (guide); 1 = the old
-    # sequential behavior.
-    max_concurrent_types: int = 3
     # (ViewDefinition dict, destination path) pairs: each view is
     # materialized flat and refreshed INCREMENTALLY at the upkeep
     # cadence (operators/materialized_view.py — per-resource
@@ -119,7 +127,7 @@ class BundlePipeline:
         self._tables: dict[str, KeyedTable] = {}
         # per-operation latency histogram, labeled (operation,
         # resource_type) — reference delta_operations_timer
-        # (/root/reference/src/bundle_processor.py:213-233)
+        # (the reference's src/bundle_processor.py:213-233)
         self.op_timer = HistogramSnapshot()
         # cumulative {(resource_type, rule): [violations, checked]}
         # fed by cfg.validation_specs via _validate_batch
@@ -128,8 +136,6 @@ class BundlePipeline:
         # per-type thread pool: appends to the ONE dead-letter path
         # (two concurrent append jobs would race on the same
         # _temporary staging dir) and catalog DDL
-        import threading
-
         self._shared_sink_lock = threading.Lock()
 
     # -- table access ----------------------------------------------------
@@ -141,9 +147,7 @@ class BundlePipeline:
             }
             self._tables[resource_type] = KeyedTable(
                 self.spark,
-                os.path.join(
-                    self.cfg.warehouse_dir, f"{resource_type}.parquet"
-                ),
+                self._path(f"{resource_type}.parquet"),
                 key="id",
                 # W1 dedup (latest_per_key) runs before every merge, so
                 # the source is key-unique by construction — skip the
@@ -178,10 +182,8 @@ class BundlePipeline:
             rows = validation_summary(
                 sp, encoded, valuesets=self.cfg.validation_valuesets
             ).collect()
-            # the fold is read-modify-write on shared state; under the
-            # per-type pool two types sharing a rule name would race —
-            # the collect() above (the expensive part) stays outside
-            # the critical section
+            # the fold is read-modify-write on state the type pool
+            # shares; the collect() above stays outside the lock
             with self._shared_sink_lock:
                 for r in rows:
                     slot = self.validation_stats.setdefault(
@@ -197,33 +199,53 @@ class BundlePipeline:
                     )
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Reference process_batch parity
-        (/root/reference/src/bundle_processor.py:79-155), single-pass,
-        plus dead-lettering: rows whose payload fails the envelope parse
-        (malformed JSON / not a bundle) are appended to a ``_corrupt``
-        table with provenance instead of vanishing — silent drops are
-        how streaming pipelines lose data unnoticed.
+        """One micro-batch (the reference's process_batch,
+        src/bundle_processor.py:79-155): parse, dedup, count once, then
+        per type dead-letter -> upsert -> delete. Rows whose payload
+        fails the envelope parse (malformed JSON / not a bundle) are
+        appended to a ``_corrupt`` table with provenance instead of
+        vanishing — silent drops are how streaming pipelines lose data
+        unnoticed.
         """
         from fhir_to_lakehouse_spark.operators.bundles import (
             explode_entries,
             parse_bundles,
         )
 
-        # one JSON parse for the whole batch: the corrupt probe and the
-        # explode chain both read the cached parse (re-deriving prepared
-        # from the raw frame would from_json the batch a second time)
+        # one envelope parse, read by the corrupt probe and the explode
         parsed = parse_bundles(batch_df).persist()
-        prepared = explode_entries(parsed).persist()
+        # W1 (partition asc, offset desc) over every entry at once:
+        # request_url is <type>/<id>, so this is the per-type dedup.
+        # `invalid` marks a PUT whose resource has no parseable id —
+        # exactly the rows the curated encode turns into a null key
+        winners = (
+            latest_per_key(explode_entries(parsed))
+            .withColumn(
+                "invalid",
+                (F.col("request_method") == "PUT")
+                & F.from_json("resource", "struct<id:string>")["id"].isNull(),
+            )
+            .persist()
+        )
         try:
-            # corrupt = the JSON failed to parse entirely, or its entry
-            # failed to parse: either the envelope is not a Bundle, or
-            # the raw payload HAS an "entry" key whose shape from_json
-            # could not read (Spark 4 partial-result parsing nulls just
-            # that field, so parsed_bundle.entry.isNull() alone cannot
-            # tell "absent" from "present but malformed" — probe the raw
-            # string). A syntactically valid Bundle with no entry array
-            # (e.g. an empty transaction) is NOT corrupt — like the
-            # reference, it just yields no rows.
+            # the ONE count: the types present and each one's exact
+            # valid-PUT / invalid-PUT / DELETE winners. It runs first so
+            # one parallel job fills both caches; the corrupt probe then
+            # counts against the warm parse.
+            counts = {
+                (r["resource_type"], r["request_method"], r["invalid"]): r["count"]
+                for r in winners.groupBy(
+                    "resource_type", "request_method", "invalid"
+                )
+                .count()
+                .collect()
+            }
+            # corrupt = the JSON failed to parse, the envelope is not a
+            # Bundle, or it HAS an "entry" key whose shape from_json could
+            # not read (Spark 4 partial-result parsing nulls just that
+            # field, so probe the raw string). A valid Bundle with no
+            # entry array is NOT corrupt: like the reference, it yields
+            # no rows.
             corrupt = parsed.filter(
                 F.col("parsed_bundle").isNull()
                 | (
@@ -236,212 +258,106 @@ class BundlePipeline:
                     )
                 )
             )
-            # The counts aggregate runs FIRST: one fully-parallel job
-            # materializes the parse/explode caches and answers batch
-            # emptiness, the type list, and per-type PUT/DELETE presence
-            # at once. The corrupt probe then counts against the warm
-            # parsed cache (~0.2 s). Ordering matters: probing corrupt
-            # first via isEmpty() pays executeTake's sequential
-            # 1/4/16/... partition scale-up against the COLD cache —
-            # measured ~4x the cost of a full parallel scan at sf0.1 —
-            # and a union-of-aggregates single action races both
-            # subtrees into recomputing the same cold cache partitions
-            # concurrently (measured slower than sequential).
-            counts = {
-                (r["resource_type"], r["request_method"]): r["count"]
-                for r in prepared.groupBy("resource_type", "request_method")
-                .count()
-                .collect()
-            }
             if corrupt.count():
                 self._dead_letter(corrupt, batch_id)
-            types = sorted({rt for rt, _ in counts if rt})
+            types = sorted({rt for rt, _, _ in counts if rt})
             if not types:
                 return
             if self.cfg.log_batch_stats:
-                prepared.groupBy("resource_type").count().show(truncate=False)
+                for (rt, method, invalid), n in sorted(counts.items(), key=str):
+                    print(f"batch {batch_id}: {rt} {method} invalid={invalid}: {n}")
+            if self.cfg.log_topic_counts:
+                # reference log_resource_count_by_source_topic
+                # (src/bundle_processor.py:131)
+                winners.groupBy("resource_type", "topic").count().show(
+                    truncate=False
+                )
 
             def _one(rt: str) -> None:
                 self._process_single_type(
-                    prepared.filter(F.col("resource_type") == rt),
+                    winners.filter(F.col("resource_type") == rt),
                     rt,
-                    has_puts=counts.get((rt, "PUT"), 0) > 0,
-                    has_deletes=counts.get((rt, "DELETE"), 0) > 0,
+                    n_valid=counts.get((rt, "PUT", False), 0),
+                    n_invalid=counts.get((rt, "PUT", True), 0),
+                    n_deletes=counts.get((rt, "DELETE", False), 0),
                     batch_id=batch_id,
                 )
 
-            workers = min(max(self.cfg.max_concurrent_types, 1), len(types))
-            if workers > 1:
-                # types maintain disjoint tables; overlapping their job
-                # chains back-fills the executor tail (guide §2.6).
-                # inheritable_thread_target propagates the JVM-side
-                # thread locals (job group/description) into pool
-                # threads — the documented PySpark idiom.
-                from concurrent.futures import ThreadPoolExecutor
-
-                from pyspark import inheritable_thread_target
-
-                with ThreadPoolExecutor(max_workers=workers) as pool:
-                    futures = [
-                        pool.submit(inheritable_thread_target(_one), rt)
-                        for rt in types
-                    ]
-                    for fut in futures:
-                        fut.result()
-            else:
-                for rt in types:
-                    _one(rt)
+            # inheritable_thread_target carries the thread locals (job
+            # group/description, the session's job tags) into the pool
+            target = inheritable_thread_target(batch_df.sparkSession)(_one)
+            with ThreadPoolExecutor(min(TYPE_POOL_SIZE, len(types))) as pool:
+                list(pool.map(target, types))
             if batch_id % self.cfg.upkeep_interval == 0:
                 self.upkeep(types)
         finally:
             parsed.unpersist()
-            prepared.unpersist()
+            winners.unpersist()
 
     def _process_single_type(
         self,
-        df: DataFrame,
+        winners: DataFrame,
         resource_type: str,
-        has_puts: bool = True,
-        has_deletes: bool = True,
-        batch_id: int = -1,
+        n_valid: int,
+        n_invalid: int,
+        n_deletes: int,
+        batch_id: int,
     ) -> None:
-        """Dedup -> encode PUTs -> upsert -> delete (order matters:
-        upsert FIRST, then deletes, like the reference at
-        /root/reference/src/bundle_processor.py:221-234)."""
-        # cache the dedup output: the window shuffle would otherwise
-        # re-run for every consumer (emptiness probes, upsert, delete)
-        deduped = latest_per_key(df).persist()  # W1: partition asc, offset desc
-        try:
-            if self.cfg.log_topic_counts:
-                # reference log_resource_count_by_source_topic
-                # (/root/reference/src/bundle_processor.py:131)
-                deduped.groupBy("topic").count().show(truncate=False)
-            puts, deletes = split_by_method(deduped)
-
-            tbl = self.table(resource_type)
-            # deletes can only hit rows that existed BEFORE this batch:
-            # W1 dedup leaves one row per key, so a key whose winner is
-            # DELETE has no PUT row in this batch's upsert. If the table
-            # is only being created now, the delete pass would rewrite
-            # it to remove nothing — skip it entirely (matters for
-            # first-batch backfills, where it halves the table I/O).
-            existed_before = tbl.exists()
-            encoded = encode_resources(
-                puts,
-                resource_type,
-                normalize_refs=self.cfg.normalize_references_at_write,
-                include_extensions=self.cfg.encode_extensions,
+        """Dead-letter -> upsert -> delete for one type's winners, whose
+        exact counts the caller already holds (upsert FIRST, then
+        deletes, like the reference at src/bundle_processor.py:221-234)."""
+        puts, deletes = split_by_method(winners)
+        tbl = self.table(resource_type)
+        # deletes can only hit rows that existed BEFORE this batch (a
+        # key has one winner): on a table created now the delete pass
+        # would rewrite it to remove nothing
+        existed_before = tbl.exists()
+        encoded = encode_resources(
+            puts.filter(~F.col("invalid")),
+            resource_type,
+            normalize_refs=self.cfg.normalize_references_at_write,
+            include_extensions=self.cfg.encode_extensions,
+        )
+        self._validate_batch(resource_type, encoded)
+        # table creation is unconditional once a type appears — the
+        # reference creates the (possibly empty) table before merging,
+        # so a DELETE-only first batch still materializes the table
+        # (src/bundle_processor.py:172-204); the curated schema is
+        # static, so no rows are needed to derive it
+        tbl.create_if_not_exists(
+            encoded.schema,
+            cluster_by=self.cfg.clustering_columns.get(resource_type),
+        )
+        if self.cfg.register_schema:
+            with self._timed("register", resource_type):
+                self._register(resource_type)
+        if n_invalid:
+            # a PUT whose inner resource JSON fails the parse would
+            # plant a null-key row: dead-letter its raw resource instead
+            # (the reference's Pathling encoder throws for these; silent
+            # nulls are worse than either)
+            self._dead_letter_resources(
+                puts.filter(F.col("invalid")), resource_type, batch_id
             )
-            self._validate_batch(resource_type, encoded)
-            # table creation is unconditional once a type appears — the
-            # reference creates the (possibly empty) table before merging,
-            # so a DELETE-only first batch still materializes the table
-            # (/root/reference/src/bundle_processor.py:172-204); the curated
-            # schema is static, so no rows are needed to derive it
-            tbl.create_if_not_exists(
-                encoded.schema,
-                cluster_by=self.cfg.clustering_columns.get(resource_type),
-            )
-            if self.cfg.register_schema:
-                with MeasureElapsed(
-                    self.op_timer,
-                    DELTA_OPERATION_SECONDS,
-                    operation="register",
-                    resource_type=resource_type,
-                ):
-                    self._register(resource_type)
-            # counts are pre-dedup: when only one method appears for the
-            # type they are exact; when both appear, W1 races can empty
-            # either side, so one aggregate over the dedup cache counts
-            # both winner sides in a single parallel job (the common
-            # single-method batch pays zero extra jobs; per-side
-            # isEmpty() probes would re-run the executeTake scale-up
-            # against the cache once per side)
-            n_put_winners = n_del_winners = None
-            if has_puts and has_deletes:
-                w = deduped.agg(
-                    F.count_if(F.col("request_method") == "PUT").alias("p"),
-                    F.count_if(F.col("request_method") == "DELETE").alias("d"),
-                ).collect()[0]
-                n_put_winners, n_del_winners = w["p"], w["d"]
-
-            if has_puts and (n_put_winners is None or n_put_winners > 0):
-                # a PUT whose inner resource JSON failed the curated
-                # parse encodes to a null id — merging it would plant a
-                # null-key row in the table. Dead-letter it with the raw
-                # resource instead (the reference's Pathling encoder
-                # throws for these; silent nulls are worse than either).
-                if tbl.is_delta:
-                    # Delta compiles MERGE into its own command, so an
-                    # Observation on the source side has no guaranteed
-                    # delivery — keep the explicit one-aggregate probe
-                    # (still a single job answering both counts).
-                    enc = encoded.agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.count_if(F.col("id").isNull()).alias("n_invalid"),
-                    ).collect()[0]
-                    if enc["n_invalid"]:
-                        self._dead_letter_resources(
-                            encoded.filter(F.col("id").isNull()),
-                            resource_type,
-                            batch_id,
-                        )
-                        encoded = encoded.filter(F.col("id").isNotNull())
-                    if enc["n"] > enc["n_invalid"]:
-                        with MeasureElapsed(
-                            self.op_timer,
-                            DELTA_OPERATION_SECONDS,
-                            operation="merge",
-                            resource_type=resource_type,
-                        ):
-                            tbl.merge_upsert(encoded)
-                else:
-                    # parquet path: the row/invalid counts ride the
-                    # MERGE job itself via the Observation API — one
-                    # collect job per type per batch saved (the old
-                    # aggregate re-ran the from_json encode over the
-                    # dedup cache). CollectMetrics is a pushdown
-                    # barrier, so `n_invalid` counts pre-filter rows
-                    # even though the merge consumes only valid ones
-                    # (pinned in test_bundles).
-                    from pyspark.sql import Observation
-
-                    obs = Observation()
-                    observed = encoded.observe(
-                        obs,
-                        F.count(F.lit(1)).alias("n"),
-                        F.count_if(F.col("id").isNull()).alias("n_invalid"),
-                    )
-                    with MeasureElapsed(
-                        self.op_timer,
-                        DELTA_OPERATION_SECONDS,
-                        operation="merge",
-                        resource_type=resource_type,
-                    ):
-                        tbl.merge_upsert(
-                            observed.filter(F.col("id").isNotNull())
-                        )
-                    if obs.get["n_invalid"]:
-                        self._dead_letter_resources(
-                            encoded.filter(F.col("id").isNull()),
-                            resource_type,
-                            batch_id,
-                        )
-
-            if has_deletes and existed_before:
-                delete_ids = deletes.select(
-                    F.col("request_resource_id").alias("id")
+        if n_valid or n_invalid:
+            # an all-invalid type still merges its empty valid set, which
+            # rewrites the parquet table: on small trickle batches that
+            # rewrite is what compacts the table's files today
+            with self._timed("merge", resource_type):
+                tbl.merge_upsert(encoded)
+        if n_deletes and existed_before:
+            with self._timed("delete", resource_type):
+                tbl.merge_delete(
+                    deletes.select(F.col("request_resource_id").alias("id"))
                 )
-                if not has_puts or n_del_winners > 0:
-                    with MeasureElapsed(
-                        self.op_timer,
-                        DELTA_OPERATION_SECONDS,
-                        operation="delete",
-                        resource_type=resource_type,
-                    ):
-                        tbl.merge_delete(delete_ids)
-        finally:
-            deduped.unpersist()
+
+    def _timed(self, operation: str, resource_type: str) -> MeasureElapsed:
+        return MeasureElapsed(
+            self.op_timer,
+            DELTA_OPERATION_SECONDS,
+            operation=operation,
+            resource_type=resource_type,
+        )
 
     def _dead_letter(self, corrupt: DataFrame, batch_id: int) -> None:
         """Append unparseable records (raw payload + Kafka provenance +
@@ -454,12 +370,10 @@ class BundlePipeline:
             "timestamp",
             F.lit(batch_id).alias("batch_id"),
         )
-        path = os.path.join(self.cfg.warehouse_dir, "_corrupt.parquet")
-        out.write.mode("append").parquet(path)
+        out.write.mode("append").parquet(self._path("_corrupt.parquet"))
 
     def corrupt_records(self) -> DataFrame:
-        path = os.path.join(self.cfg.warehouse_dir, "_corrupt.parquet")
-        return self.spark.read.parquet(path)
+        return self.spark.read.parquet(self._path("_corrupt.parquet"))
 
     def _dead_letter_resources(
         self, invalid: DataFrame, resource_type: str, batch_id: int
@@ -467,26 +381,25 @@ class BundlePipeline:
         """Append entry-level failures (valid envelope, unparseable
         inner resource) to the resource corrupt table."""
         out = invalid.select(
-            F.col("resource_json").alias("raw_resource"),
+            F.col("resource").alias("raw_resource"),
             F.lit(resource_type).alias("resource_type"),
             F.lit(batch_id).alias("batch_id"),
         )
-        path = os.path.join(
-            self.cfg.warehouse_dir, "_corrupt_resources.parquet"
-        )
         with self._shared_sink_lock:
-            out.write.mode("append").parquet(path)
+            out.write.mode("append").parquet(
+                self._path("_corrupt_resources.parquet")
+            )
 
     def corrupt_resources(self) -> DataFrame:
-        path = os.path.join(
-            self.cfg.warehouse_dir, "_corrupt_resources.parquet"
-        )
-        return self.spark.read.parquet(path)
+        return self.spark.read.parquet(self._path("_corrupt_resources.parquet"))
+
+    def _path(self, name: str) -> str:
+        return os.path.join(self.cfg.warehouse_dir, name)
 
     def _register(self, resource_type: str) -> None:
         """Catalog registration at table-create time (reference
         _register_table_in_metastore,
-        /root/reference/src/bundle_processor.py:330-357)."""
+        src/bundle_processor.py:330-357)."""
         from fhir_to_lakehouse_spark.session import delta_available
 
         schema = self.cfg.register_schema
@@ -534,7 +447,7 @@ class BundlePipeline:
         available_now: bool = False,
     ):
         """Single streaming query over the whole source (fixes the
-        reference's per-type fan-out, /root/reference/src/main.py:157-188
+        reference's per-type fan-out, its src/main.py:157-188
         — one Kafka read, per-type routing inside the batch).
 
         ``available_now=True`` switches to the bounded-backfill trigger:

@@ -545,11 +545,9 @@ def test_pipeline_encode_extensions_widens_and_serves_views(spark, tmp_path):
     assert got == {"old": None, "new": "F"}
 
 
-def test_concurrent_type_processing_matches_sequential(spark, tmp_path):
-    """The per-type thread pool (PipelineConfig.max_concurrent_types,
-    r12 — guide §2.6 overlap of independent jobs) is a scheduling
-    change only: a mixed-type batch lands byte-identical tables under
-    workers=3 and workers=1."""
+def test_type_pool_lands_expected_tables(spark, pipeline):
+    """The types of a batch run side by side on the driver thread pool
+    over the shared winners cache; each lands exactly its own table."""
     rows = [
         {"value": put_bundle("Patient", "1", active=True), "offset": 0},
         {"value": put_bundle("Patient", "2", active=False), "offset": 1},
@@ -559,22 +557,172 @@ def test_concurrent_type_processing_matches_sequential(spark, tmp_path):
         {"value": put_bundle("Condition", "20"), "offset": 5},
         {"value": delete_bundle("Condition", "99"), "offset": 6},
     ]
-    outputs = {}
-    for workers in (1, 3):
-        cfg = PipelineConfig(
-            warehouse_dir=str(tmp_path / f"wh{workers}"),
-            checkpoint_dir=str(tmp_path / f"ck{workers}"),
-            max_concurrent_types=workers,
+    pipeline.process_batch(batch(spark, rows), batch_id=1)
+    got = {
+        rt: sorted(
+            tuple(r) for r in pipeline.table(rt).to_df().select("id").collect()
         )
-        pipe = BundlePipeline(spark, cfg)
-        pipe.process_batch(batch(spark, rows), batch_id=1)
-        outputs[workers] = {
-            rt: sorted(
-                (r["id"],) for r in pipe.table(rt).to_df().select("id").collect()
-            )
-            for rt in ("Patient", "Observation", "Condition")
+        for rt in ("Patient", "Observation", "Condition")
+    }
+    assert got == {
+        "Patient": [("1",)],
+        "Observation": [("10",)],
+        "Condition": [("20",)],
+    }
+    obs = pipeline.table("Observation").to_df().collect()[0]
+    assert obs["status"] == "amended"
+
+
+# Spark jobs of test_mixed_batch_job_count's batch, as measured: the
+# two caches, the one count and the corrupt probe, then only writes.
+# A probe job added per type (a persisted dedup, a winners aggregate,
+# a validity check) pushes it past this.
+MIXED_BATCH_MAX_JOBS = 21
+
+
+# Inner-resource payloads the pipeline's id-only validity flag must
+# judge exactly like the curated encode (null id <=> invalid)
+_ODD_RESOURCES = [
+    None,
+    "{definitely not json",
+    "",
+    "null",
+    '"just a string"',
+    '[{"id": "in-array"}]',
+    '[{"id": "a"}, {"id": "b"}]',
+    '{"id": 42}',
+    '{"id": {"nested": "x"}}',
+    '{"id": null}',
+    '{"resourceType": "Patient"}',
+    '{"id": "t1"} trailing garbage',
+    '{"id": "t2", "name": [',
+    '{"id": "ok-1", "status": "final"}',
+    # a valid id beside siblings whose types clash with every curated
+    # schema checked below
+    '{"id": "mixed", "active": "yes", "birthDate": "not-a-date",'
+    ' "name": "oops", "status": {"a": 1}, "subject": "Patient/1",'
+    ' "valueQuantity": {"value": "abc"}, "valueInteger": "seven",'
+    ' "component": {"x": 1}, "category": "vital", "code": [1, 2],'
+    ' "clinicalStatus": true, "period": 3, "class": [],'
+    ' "participant": "none"}',
+    '{"id": "big", "valueInteger": 1e40, "multipleBirthBoolean": 3}',
+]
+
+
+@pytest.mark.parametrize(
+    "resource_type", ["Patient", "Observation", "Condition", "Encounter"]
+)
+def test_id_only_validity_matches_curated_encode(spark, resource_type):
+    """process_batch flags a PUT invalid when from_json(resource,
+    struct<id:string>).id is null, and merges only unflagged rows. That
+    is safe only if the curated encode yields a null id for exactly the
+    same rows: a row valid by id alone but null-keyed by the full parse
+    would land a null-key row in the table."""
+    from pyspark.sql import functions as F
+
+    from fhir_to_lakehouse_spark.operators.bundles import encode_resources
+
+    df = spark.createDataFrame(
+        [(r,) for r in _ODD_RESOURCES], "resource string"
+    ).coalesce(1)
+    flagged = [
+        r[0]
+        for r in df.select(
+            F.from_json("resource", "struct<id:string>")["id"].isNull()
+        ).collect()
+    ]
+    # every column collected: Catalyst cannot prune the curated parse
+    # down to `id`
+    encoded = encode_resources(df, resource_type).collect()
+    assert len(encoded) == len(_ODD_RESOURCES)
+    assert [r["id"] is None for r in encoded] == flagged
+    assert flagged.count(False) >= 6  # the valid rows are really there
+
+
+def test_mixed_batch_job_count(spark, pipeline, monkeypatch):
+    """A mixed batch (3 types, a PUT/DELETE race, an invalid inner
+    resource, a corrupt envelope) into existing tables runs a bounded
+    number of Spark jobs: one parse cache, one winners cache and one
+    count, then only the writes. Jobs are counted under a job group,
+    which the type pool's inheritable_thread_target carries into its
+    threads."""
+    import json
+
+    seed = [
+        {"value": put_bundle("Patient", "p1", active=True), "offset": 0},
+        {"value": put_bundle("Observation", "o1", status="final"), "offset": 1},
+        {"value": put_bundle("Condition", "c1"), "offset": 2},
+    ]
+    pipeline.process_batch(batch(spark, seed), batch_id=1)
+    bad = json.dumps(
+        {
+            "resourceType": "Bundle",
+            "type": "transaction",
+            "entry": [
+                {
+                    "resource": "{not json",
+                    "request": {"method": "PUT", "url": "Observation/o9"},
+                }
+            ],
         }
-    assert outputs[1] == outputs[3]
-    assert outputs[3]["Patient"] == [("1",)]
-    assert outputs[3]["Observation"] == [("10",)]
-    assert outputs[3]["Condition"] == [("20",)]
+    )
+    rows = [
+        {"value": put_bundle("Patient", "p1", active=False), "offset": 3},
+        {"value": delete_bundle("Patient", "p1"), "offset": 4},
+        {"value": put_bundle("Patient", "p2", active=True), "offset": 5},
+        {"value": put_bundle("Observation", "o2", status="final"), "offset": 6},
+        {"value": bad, "offset": 7},
+        {"value": delete_bundle("Condition", "c1"), "offset": 8},
+        {"value": "not a bundle {{{", "offset": 9},
+    ]
+    DataFrame = type(spark.range(1))  # the concrete (classic) class
+    persisted = []
+    real_persist = DataFrame.persist
+
+    def persist(df, *args, **kwargs):
+        persisted.append(df)
+        return real_persist(df, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "persist", persist)
+    sc = spark.sparkContext
+    group = "test-mixed-batch-job-count"
+    sc.setJobGroup(group, "mixed batch")
+    try:
+        pipeline.process_batch(batch(spark, rows), batch_id=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    # the batch did its work
+    ids = {
+        rt: sorted(r["id"] for r in pipeline.table(rt).to_df().collect())
+        for rt in ("Patient", "Observation", "Condition")
+    }
+    assert ids == {"Patient": ["p2"], "Observation": ["o1", "o2"], "Condition": []}
+    assert pipeline.corrupt_records().count() == 1
+    assert pipeline.corrupt_resources().count() == 1
+    assert n_jobs <= MIXED_BATCH_MAX_JOBS, n_jobs
+    # the parse cache and the winners cache, nothing per type
+    assert len(persisted) == 2
+
+
+def test_batch_logs_come_from_the_one_count(spark, tmp_path, capsys):
+    """log_batch_stats prints the winner counts the batch already
+    collected; log_topic_counts adds one per-(type, topic) table."""
+    cfg = PipelineConfig(
+        warehouse_dir=str(tmp_path / "warehouse"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        log_batch_stats=True,
+        log_topic_counts=True,
+    )
+    rows = [
+        {"value": put_bundle("Patient", "1"), "offset": 0},
+        {"value": put_bundle("Patient", "1", active=True), "offset": 1},
+        {"value": delete_bundle("Condition", "9"), "offset": 2},
+    ]
+    BundlePipeline(spark, cfg).process_batch(batch(spark, rows), batch_id=4)
+    out = capsys.readouterr().out
+    assert "batch 4: Patient PUT invalid=False: 1" in out
+    assert "batch 4: Condition DELETE invalid=False: 1" in out
+    assert "|resource_type|topic" in out.replace(" ", "")
+

@@ -349,3 +349,27 @@ def test_histogram_snapshot_is_thread_safe():
     for w in range(workers):
         s = hist.get("op_seconds", operation="merge", rt=str(w))
         assert s["count"] == n and s["sum"] == n * 0.5
+
+
+def test_histogram_snapshot_reads_are_copies():
+    """get() and items() hand out copies taken under the lock: a caller
+    mutating what it read leaves the store unchanged, and an
+    observe() racing a reader cannot change the reader's view."""
+    from fhir_to_lakehouse_spark.streaming.metrics import HistogramSnapshot
+
+    hist = HistogramSnapshot()
+    hist.observe("op_seconds", 2.0, operation="merge")
+    got = hist.get("op_seconds", operation="merge")
+    got["count"] = 99
+    got["sum"] = -1.0
+    [(key, series)] = hist.items()
+    series["max"] = 1e9
+    hist.observe("op_seconds", 1.0, operation="delete")
+    assert hist.get("op_seconds", operation="merge") == {
+        "count": 1, "sum": 2.0, "min": 2.0, "max": 2.0,
+    }
+    assert key == ("op_seconds", (("operation", "merge"),))
+    assert series == {"count": 1, "sum": 2.0, "min": 2.0, "max": 1e9}
+    assert len(hist.items()) == 2
+    assert hist.get("op_seconds", operation="absent") is None
+

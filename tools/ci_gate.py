@@ -10,7 +10,8 @@ them before any new work:
    BroadcastNestedLoopJoin, lineage-truncated iterative plans,
    WindowGroupLimit / join-strategy shapes);
 3. the bundle-pipeline truth table (the reference's conflict-
-   resolution goldens + encoder round-trips).
+   resolution goldens + encoder round-trips) and the stream's
+   crash-recovery replays.
 
 Usage:
 
@@ -52,6 +53,7 @@ STAGES = [
             "pytest",
             "tests/test_bundles.py",
             "tests/test_encoder_widened.py",
+            "tests/test_crash_recovery_stream.py",
             "-q",
         ],
     ),
