@@ -1,12 +1,16 @@
 """Benchmark runner (driver contract).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+Runs the headline queries and the end-to-end (e2e) pipeline entries at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric": ...,
+"value": total_sec, "unit": "sec", "queries": {name: sec}, "sf": ...}.
 
-Each query runs as one warm-up pass (JIT/codegen, file footers — NOT
-reported) followed by $BENCH_REPS timed passes (default 3); the
+All 64 entries share one protocol (`_measure` in main()): a setup
+that runs once, off the clock (the e2e entries' input data: persisted
+bundle events, a parquet file-source directory); then one warm-up pass
+(JIT/codegen, file footers — NOT reported) followed by $BENCH_REPS
+timed passes (default 3), each with its own off-the-clock preparation
+(a fresh warehouse or checkpoint directory) and teardown. The
 reported number is the MEDIAN timed pass. For queries that persist a
 load-bearing intermediate (minhash signatures, the prefix join's
 distinct-set groups, tf aggregates), the warm-up pass also populates
@@ -26,7 +30,9 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
+from contextlib import ExitStack
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -143,6 +149,25 @@ HEADLINE = [
 ]
 
 
+def _cpu_jiffies() -> tuple[int, int, int] | None:
+    """(total, busy, steal) jiffies (USER_HZ=100) summed over all CPUs,
+    from the aggregate `cpu` line of /proc/stat; None off Linux. Busy
+    excludes idle and iowait. Steal (field 8, -1 when the kernel does
+    not report it) is hypervisor time: on a VM, host-side contention
+    deschedules vCPUs (wall time inflates, our utime does not) and
+    SMT-sibling pressure inflates cycles-per-instruction (our utime
+    inflates with zero guest-visible foreign processes) — steal is the
+    only guest-visible signal for either, and it adjudicates the
+    own-CPU pass flaps that cpu_other_s cannot."""
+    try:
+        with open("/proc/stat") as fh:
+            vals = [int(x) for x in fh.readline().split()[1:]]
+    except OSError:  # pragma: no cover
+        return None
+    idle = vals[3] + (vals[4] if len(vals) > 4 else 0)
+    return sum(vals), sum(vals) - idle, (vals[7] if len(vals) > 7 else -1)
+
+
 def _cpu_busy_frac(window_s: float = 0.25) -> float:
     """Fraction of total CPU time spent non-idle over a short window,
     from /proc/stat. Unlike the load average (decay constant ~1 min,
@@ -151,49 +176,13 @@ def _cpu_busy_frac(window_s: float = 0.25) -> float:
     own JVM is idle, so any busy fraction is someone else's work (or
     our just-triggered GC finishing — which waiting out is equally
     correct)."""
-    def snap() -> tuple[int, int]:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        vals = [int(x) for x in parts[1:]]
-        idle = vals[3] + (vals[4] if len(vals) > 4 else 0)  # idle+iowait
-        return sum(vals), idle
-
-    try:
-        t0, i0 = snap()
-        time.sleep(window_s)
-        t1, i1 = snap()
-    except OSError:  # pragma: no cover — non-Linux fallback: never wait
+    c0 = _cpu_jiffies()
+    if c0 is None:  # pragma: no cover — non-Linux fallback: never wait
         return 0.0
-    dt = t1 - t0
-    return 0.0 if dt <= 0 else 1.0 - (i1 - i0) / dt
-
-
-def _busy_jiffies() -> int:
-    """Total non-idle jiffies across all CPUs (USER_HZ=100), or -1 on
-    non-Linux."""
-    try:
-        with open("/proc/stat") as fh:
-            vals = [int(x) for x in fh.readline().split()[1:]]
-    except OSError:  # pragma: no cover
-        return -1
-    idle = vals[3] + (vals[4] if len(vals) > 4 else 0)
-    return sum(vals) - idle
-
-
-def _steal_jiffies() -> int:
-    """Hypervisor steal jiffies (field 8 of /proc/stat cpu line), or
-    -1 when unavailable. This box is a Firecracker microVM: host-side
-    contention deschedules vCPUs (wall time inflates, our utime does
-    not) and SMT-sibling pressure inflates cycles-per-instruction (our
-    utime inflates with zero guest-visible foreign processes) — steal
-    is the only guest-visible signal for either, and it adjudicates
-    the own-CPU pass flaps that cpu_other_s cannot."""
-    try:
-        with open("/proc/stat") as fh:
-            vals = [int(x) for x in fh.readline().split()[1:]]
-        return vals[7] if len(vals) > 7 else -1
-    except OSError:  # pragma: no cover
-        return -1
+    time.sleep(window_s)
+    c1 = _cpu_jiffies() or c0
+    dt = c1[0] - c0[0]
+    return 0.0 if dt <= 0 else (c1[1] - c0[1]) / dt
 
 
 def _settle(cap_s: float, busy_thresh: float) -> tuple[float, float]:
@@ -212,108 +201,114 @@ def _settle(cap_s: float, busy_thresh: float) -> tuple[float, float]:
     return waited, busy
 
 
-def bench_etl_pipeline(spark, sf_dir: str) -> float:
+# End-to-end entries. Each is a setup function
+# `(spark, sf_dir, stack) -> prepare` that `_measure` in main() runs
+# once per measurement, OFF the clock; `stack` (an ExitStack) takes its
+# teardown. `prepare(pass_stack)` runs before each pass, also off the
+# clock, and returns the callable that IS the timed pass; `pass_stack`
+# takes the per-pass teardown.
+
+
+def _tmp(stack: ExitStack, prefix: str) -> str:
+    return stack.enter_context(
+        tempfile.TemporaryDirectory(prefix=prefix, ignore_cleanup_errors=True)
+    )
+
+
+def _file_stream(spark, df, stack: ExitStack):
+    """`df` written once as a parquet file-source directory; returns a
+    function that opens a new streaming read of it."""
+    src = _tmp(stack, "bench-src-")
+    df.write.mode("overwrite").parquet(src)
+    schema = spark.read.parquet(src).schema
+    return lambda: spark.readStream.schema(schema).parquet(src)
+
+
+def _bundle_pipeline(spark, wh: str):
+    from fhir_to_lakehouse_spark.streaming.pipeline import (
+        BundlePipeline,
+        PipelineConfig,
+    )
+
+    return BundlePipeline(
+        spark,
+        PipelineConfig(
+            warehouse_dir=wh,
+            checkpoint_dir=os.path.join(wh, "ck"),
+            upkeep_interval=10_000,
+        ),
+    )
+
+
+def bench_etl_pipeline(spark, sf_dir: str, stack: ExitStack):
     """End-to-end ETL throughput (the reference's flagship path):
     synthesize one FHIR bundle per event row, run the full
     parse/dedup/encode/merge pipeline into a fresh warehouse, time it.
     The reference's e2e proxy is 100 bundles visible in ~30 s in kind
     (BASELINE.md); this measures the same work as one micro-batch."""
-    import shutil
-    import tempfile
-
     from fhir_to_lakehouse_spark.plans.pipeline_q import _bundle_events
-    from fhir_to_lakehouse_spark.streaming.pipeline import (
-        BundlePipeline,
-        PipelineConfig,
-    )
 
-    # materialize the synthetic Kafka batch BEFORE the clock starts:
-    # a real micro-batch arrives as already-serialized bytes from the
-    # source — the to_json synthesis is bench-harness input
-    # generation, not pipeline work
+    # materialize the synthetic Kafka batch in setup: a real
+    # micro-batch arrives as already-serialized bytes from the source —
+    # the to_json synthesis is bench-harness input generation, not
+    # pipeline work
     events = _bundle_events(spark, sf_dir).persist()
+    stack.callback(events.unpersist)
     events.count()
-    cold = os.environ.get("BENCH_COLD") == "1"
-    try:
-        # same steady-state policy as the headline queries (module
-        # docstring): pass 1 warms codegen/JIT for this plan shape
-        # (dropped), then the MEDIAN of $BENCH_REPS timed passes is
-        # reported. Each pass gets a FRESH warehouse so all measure the
-        # same first-batch work.
-        reps = 1 if cold else 1 + max(1, int(os.environ.get("BENCH_REPS", "3")))
-        times = []
-        for _ in range(reps):
-            wh = tempfile.mkdtemp(prefix="bench-wh-")
-            try:
-                pipe = BundlePipeline(
-                    spark,
-                    PipelineConfig(
-                        warehouse_dir=wh,
-                        checkpoint_dir=os.path.join(wh, "ck"),
-                        upkeep_interval=10_000,
-                    ),
-                )
-                t0 = time.perf_counter()
-                pipe.process_batch(events, batch_id=1)
-                times.append(time.perf_counter() - t0)
-            finally:
-                shutil.rmtree(wh, ignore_errors=True)
-        timed = times if cold else sorted(times[1:])
-        return timed[len(timed) // 2]
-    finally:
-        events.unpersist()
+
+    def prepare(pass_stack: ExitStack):
+        # a FRESH warehouse per pass, so every pass measures the same
+        # first-batch work
+        pipe = _bundle_pipeline(spark, _tmp(pass_stack, "bench-wh-"))
+        return lambda: pipe.process_batch(events, batch_id=1)
+
+    return prepare
 
 
-def bench_etl_stream(spark, sf_dir: str) -> float:
+def bench_etl_stream(spark, sf_dir: str, stack: ExitStack):
     """The same ETL work driven through the REAL streaming shell:
     parquet file source -> start_stream(available_now=True) ->
     foreachBatch -> keyed tables, including checkpoint/offset-log/
     commit overhead that process_batch alone doesn't pay. The delta
     between this and etl_pipeline_batch IS the shell overhead."""
-    import shutil
-    import tempfile
-
     from fhir_to_lakehouse_spark.plans.pipeline_q import _bundle_events
-    from fhir_to_lakehouse_spark.streaming.pipeline import (
-        BundlePipeline,
-        PipelineConfig,
-    )
 
-    src_dir = tempfile.mkdtemp(prefix="bench-src-")
-    cold = os.environ.get("BENCH_COLD") == "1"
-    try:
-        # input materialization is harness work — outside the clock
-        _bundle_events(spark, sf_dir).write.mode("overwrite").parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-        reps = 1 if cold else 1 + max(1, int(os.environ.get("BENCH_REPS", "3")))
-        times = []
-        for i in range(reps):
-            wh = tempfile.mkdtemp(prefix="bench-swh-")
-            try:
-                pipe = BundlePipeline(
-                    spark,
-                    PipelineConfig(
-                        warehouse_dir=wh,
-                        checkpoint_dir=os.path.join(wh, "ck"),
-                        upkeep_interval=10_000,
-                    ),
-                )
-                stream = spark.readStream.schema(schema).parquet(src_dir)
-                t0 = time.perf_counter()
-                q = pipe.start_stream(
-                    stream, f"bench_stream_{i}", available_now=True
-                )
-                q.awaitTermination()
-                times.append(time.perf_counter() - t0)
-            finally:
-                shutil.rmtree(wh, ignore_errors=True)
-        timed = times if cold else sorted(times[1:])
-        return timed[len(timed) // 2]
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
+    open_stream = _file_stream(spark, _bundle_events(spark, sf_dir), stack)
+
+    def prepare(pass_stack: ExitStack):
+        pipe = _bundle_pipeline(spark, _tmp(pass_stack, "bench-swh-"))
+        stream = open_stream()
+        return lambda: pipe.start_stream(
+            stream, "bench_stream", available_now=True
+        ).awaitTermination()
+
+    return prepare
 
 
-def bench_stream_session_window(spark, sf_dir: str) -> float:
+def _noop_stream(spark, sf_dir: str, stack: ExitStack, transform, mode: str):
+    """Events file source -> `transform` -> noop sink with availableNow,
+    on a fresh checkpoint per pass."""
+    from fhir_to_lakehouse_spark.sources.tables import load_table
+
+    open_stream = _file_stream(spark, load_table(spark, sf_dir, "events"), stack)
+
+    def prepare(pass_stack: ExitStack):
+        ck = _tmp(pass_stack, "bench-ck-")
+        stream = open_stream()
+        return lambda: (
+            transform(stream)
+            .writeStream.outputMode(mode)
+            .format("noop")
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+
+    return prepare
+
+
+def bench_stream_session_window(spark, sf_dir: str, stack: ExitStack):
     """Session windows through the REAL streaming shell (VERDICT r3
     item 8): file source -> session_window(gap=30m) state-store agg ->
     noop sink with availableNow. The batch analog is the
@@ -322,45 +317,12 @@ def bench_stream_session_window(spark, sf_dir: str) -> float:
     plan. State per key = the open-session accumulator for that
     (user_id, session) — at 100 TB, bounded by the watermark horizon
     times the active-user cardinality, not by event volume."""
-    import shutil
-    import tempfile
-
-    from fhir_to_lakehouse_spark.sources.tables import load_table
     from fhir_to_lakehouse_spark.streaming.windows import session_counts
 
-    src_dir = tempfile.mkdtemp(prefix="bench-sess-")
-    cold = os.environ.get("BENCH_COLD") == "1"
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        ev.write.mode("overwrite").parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-        reps = 1 if cold else 1 + max(1, int(os.environ.get("BENCH_REPS", "3")))
-        times = []
-        for i in range(reps):
-            ck = tempfile.mkdtemp(prefix="bench-sess-ck-")
-            try:
-                stream = spark.readStream.schema(schema).parquet(src_dir)
-                t0 = time.perf_counter()
-                q = (
-                    session_counts(stream)
-                    .writeStream.outputMode("complete")
-                    .format("noop")
-                    .option("checkpointLocation", ck)
-                    .queryName(f"bench_sess_{i}")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-                times.append(time.perf_counter() - t0)
-            finally:
-                shutil.rmtree(ck, ignore_errors=True)
-        timed = times if cold else sorted(times[1:])
-        return timed[len(timed) // 2]
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
+    return _noop_stream(spark, sf_dir, stack, session_counts, "complete")
 
 
-def bench_stream_dedup_watermark(spark, sf_dir: str) -> float:
+def bench_stream_dedup_watermark(spark, sf_dir: str, stack: ExitStack):
     """Cross-batch streaming dedup through the REAL shell:
     dropDuplicatesWithinWatermark over the events feed (keys =
     event_id, 1h watermark) -> noop sink with availableNow. The state
@@ -368,62 +330,28 @@ def bench_stream_dedup_watermark(spark, sf_dir: str) -> float:
     state is bounded by the redelivery horizon x key arrival rate —
     the streaming counterpart of the batch min_by dedup (W1), and the
     guarantee the reference approximates with MERGE idempotency."""
-    import shutil
-    import tempfile
-
-    from fhir_to_lakehouse_spark.sources.tables import load_table
     from fhir_to_lakehouse_spark.streaming.windows import dedup_stream
 
-    src_dir = tempfile.mkdtemp(prefix="bench-dedup-")
-    cold = os.environ.get("BENCH_COLD") == "1"
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        ev.write.mode("overwrite").parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-        reps = 1 if cold else 1 + max(1, int(os.environ.get("BENCH_REPS", "3")))
-        times = []
-        for i in range(reps):
-            ck = tempfile.mkdtemp(prefix="bench-dedup-ck-")
-            try:
-                stream = spark.readStream.schema(schema).parquet(src_dir)
-                t0 = time.perf_counter()
-                q = (
-                    dedup_stream(stream, ["event_id"])
-                    .writeStream.outputMode("append")
-                    .format("noop")
-                    .option("checkpointLocation", ck)
-                    .queryName(f"bench_dedup_{i}")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-                times.append(time.perf_counter() - t0)
-            finally:
-                shutil.rmtree(ck, ignore_errors=True)
-        timed = times if cold else sorted(times[1:])
-        return timed[len(timed) // 2]
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
+    return _noop_stream(
+        spark, sf_dir, stack, lambda s: dedup_stream(s, ["event_id"]), "append"
+    )
 
 
-def bench_curation_pipeline(spark, sf_dir: str) -> float:
+def bench_curation_pipeline(spark, sf_dir: str, _stack: ExitStack):
     """End-to-end corpus-curation throughput (the LLM-data counterpart
     of etl_pipeline_batch): one composed job — quality gate ->
     exact-dedup canonical election (min_by, hot-key safe) -> benchmark
     decontamination excision (broadcast shingle probe) -> cleaned
     corpus MATERIALIZED to parquet. Measures the write-inclusive cost
     a production curation pass pays, not a reporting projection."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from fhir_to_lakehouse_spark.functions import text as TX
     from fhir_to_lakehouse_spark.sources.tables import load_table
 
-    cold = os.environ.get("BENCH_COLD") == "1"
-
-    def build():
+    def prepare(pass_stack: ExitStack):
+        pass_stack.callback(spark.catalog.clearCache)
+        out = _tmp(pass_stack, "bench-cur-")
         docs = load_table(spark, sf_dir, "documents")
         base = docs.select(
             "doc_id",
@@ -466,72 +394,71 @@ def bench_curation_pipeline(spark, sf_dir: str) -> float:
             .filter(F.col("frac") >= 0.2)
             .select("doc_id")
         )
-        return canon.join(overlap, "doc_id", "left_anti")
+        cleaned = canon.join(overlap, "doc_id", "left_anti")
+        return lambda: cleaned.write.mode("overwrite").parquet(out)
 
-    reps = 1 if cold else 1 + max(1, int(os.environ.get("BENCH_REPS", "3")))
-    times = []
-    for _ in range(reps):
-        out = tempfile.mkdtemp(prefix="bench-cur-")
-        try:
-            cleaned = build()
-            t0 = time.perf_counter()
-            cleaned.write.mode("overwrite").parquet(out)
-            times.append(time.perf_counter() - t0)
-        finally:
-            shutil.rmtree(out, ignore_errors=True)
-            spark.catalog.clearCache()
-    timed = times if cold else sorted(times[1:])
-    return timed[len(timed) // 2]
+    return prepare
 
 
-def bench_stream_incremental_dedup(spark, sf_dir: str) -> float:
+def bench_stream_incremental_dedup(spark, sf_dir: str, stack: ExitStack):
     """Incremental corpus ingest through the REAL shell: documents
     file-source -> foreachBatch (in-batch min_by first-occurrence +
     anti-join vs the fingerprint index) -> append corpus + index
     (streaming/corpus_ingest.py). Measures the write-inclusive daily-
     ingest cost; replay-idempotence is covered in pytest."""
-    import shutil
-    import tempfile
-
     from fhir_to_lakehouse_spark.sources.tables import load_table
     from fhir_to_lakehouse_spark.streaming.corpus_ingest import (
         CorpusIngestConfig,
         IncrementalDedupIngest,
     )
 
-    src_dir = tempfile.mkdtemp(prefix="bench-ing-src-")
-    cold = os.environ.get("BENCH_COLD") == "1"
-    try:
-        load_table(spark, sf_dir, "documents").write.mode(
-            "overwrite"
-        ).parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-        reps = 1 if cold else 1 + max(1, int(os.environ.get("BENCH_REPS", "3")))
-        times = []
-        for i in range(reps):
-            root = tempfile.mkdtemp(prefix="bench-ing-")
-            try:
-                ing = IncrementalDedupIngest(
-                    spark,
-                    CorpusIngestConfig(
-                        corpus_dir=os.path.join(root, "corpus"),
-                        fingerprint_dir=os.path.join(root, "fps"),
-                        checkpoint_dir=os.path.join(root, "ck"),
-                    ),
-                )
-                stream = spark.readStream.schema(schema).parquet(src_dir)
-                t0 = time.perf_counter()
-                q = ing.start_stream(
-                    stream, f"bench_ingest_{i}", available_now=True
-                )
-                q.awaitTermination()
-                times.append(time.perf_counter() - t0)
-            finally:
-                shutil.rmtree(root, ignore_errors=True)
-        timed = times if cold else sorted(times[1:])
-        return timed[len(timed) // 2]
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
+    docs = load_table(spark, sf_dir, "documents")
+    open_stream = _file_stream(spark, docs, stack)
+
+    def prepare(pass_stack: ExitStack):
+        root = _tmp(pass_stack, "bench-ing-")
+        ing = IncrementalDedupIngest(
+            spark,
+            CorpusIngestConfig(
+                corpus_dir=os.path.join(root, "corpus"),
+                fingerprint_dir=os.path.join(root, "fps"),
+                checkpoint_dir=os.path.join(root, "ck"),
+            ),
+        )
+        stream = open_stream()
+        return lambda: ing.start_stream(
+            stream, "bench_ingest", available_now=True
+        ).awaitTermination()
+
+    return prepare
+
+
+E2E = [
+    ("etl_pipeline_batch", bench_etl_pipeline),
+    ("etl_stream_availablenow", bench_etl_stream),
+    ("stream_session_window", bench_stream_session_window),
+    ("stream_dedup_watermark", bench_stream_dedup_watermark),
+    ("curation_pipeline_batch", bench_curation_pipeline),
+    ("stream_incremental_dedup", bench_stream_incremental_dedup),
+]
+
+
+def _query_entry(build):
+    """A registry query as a bench entry: no setup, and each pass both
+    builds the frame and runs it ON the clock. The action is a
+    noop-format write: it executes the full plan (every output column
+    materialized) with no driver-side row transfer. count() lets
+    Catalyst prune columns the count doesn't need — measured at sf0.1
+    it under-reported q1_pricing_summary 2.5x and graph_pagerank_trade
+    2.0x (SCALING.md "Round-4 findings")."""
+
+    def setup(spark, sf_dir: str, _stack: ExitStack):
+        def run():
+            build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+        return lambda _pass_stack: run
+
+    return setup
 
 
 def choose_tail_suffix(
@@ -596,6 +523,7 @@ def choose_tail_suffix(
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cold = os.environ.get("BENCH_COLD") == "1"
+    reps = max(1, int(os.environ.get("BENCH_REPS", "3")))
     # BENCH_ONLY=q1,q3 runs a subset (drift bisection / quick iteration);
     # "etl" entries are included only when named or when unset
     only = {
@@ -637,27 +565,6 @@ def main() -> None:
         start_load1 = start_load5 = start_load15 = None
 
     spark = get_spark("bench")
-
-    reps = max(1, int(os.environ.get("BENCH_REPS", "3")))
-
-    # Default action is a noop-format write: it executes the FULL plan
-    # (every output column materialized) with no driver-side row
-    # transfer. count() — the pre-round-4 action, kept as
-    # BENCH_ACTION=count for historical comparison — lets Catalyst
-    # prune columns the count doesn't need: measured same-session at
-    # sf0.1, count() under-reports q1_pricing_summary 2.5x (aggregate
-    # value expressions pruned) and graph_pagerank_trade 2.0x; most
-    # other entries agree within noise. SCALING.md "Round-4 findings".
-    action = os.environ.get("BENCH_ACTION", "noop")
-
-    def run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
-        if action == "count":
-            df.count()
-        else:
-            df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
 
     def _jvm_counters() -> tuple[float, float]:
         """(total GC seconds, total Janino compile seconds) so far —
@@ -737,30 +644,25 @@ def main() -> None:
         unavailable — never NaN, which is not valid JSON."""
 
         def __enter__(self):
-            self.j0 = _busy_jiffies()
-            self.s0 = _steal_jiffies()
+            self.c0 = _cpu_jiffies()
             self.ours0 = _tree_cpu_s()
             return self
 
         def __exit__(self, *exc):
-            self.steal_s = (
-                None
-                if self.s0 < 0
-                else max(0.0, (_steal_jiffies() - self.s0) / 100.0)
-            )
             # snapshot BOTH ends before arithmetic: a transient /proc
-            # read failure at exit (ours1 None) must degrade to
-            # None-attribution, not raise inside __exit__ and turn a
-            # measurable pass into a per-entry error (ADVICE r11)
+            # read failure at exit must degrade to None-attribution,
+            # not raise inside __exit__ and turn a measurable pass
+            # into a per-entry error (ADVICE r11)
+            c0, c1 = self.c0, _cpu_jiffies()
             ours1 = _tree_cpu_s()
-            if (
-                self.j0 < 0 or self.ours0 is None or ours1 is None
-            ):  # pragma: no cover
-                self.ours_s = self.other_s = None
+            self.steal_s = self.ours_s = self.other_s = None
+            if c0 is None or c1 is None:  # pragma: no cover
                 return
-            total_s = (_busy_jiffies() - self.j0) / 100.0
-            self.ours_s = max(0.0, ours1 - self.ours0)
-            self.other_s = max(0.0, total_s - self.ours_s)
+            if c0[2] >= 0:
+                self.steal_s = max(0.0, (c1[2] - c0[2]) / 100.0)
+            if self.ours0 is not None and ours1 is not None:
+                self.ours_s = max(0.0, ours1 - self.ours0)
+                self.other_s = max(0.0, (c1[1] - c0[1]) / 100.0 - self.ours_s)
 
     # per-entry adjudicability (VERDICT r10 item 1): every entry
     # records the machine/JVM state it actually ran under, so a noisy
@@ -780,9 +682,11 @@ def main() -> None:
     host_cpus = os.cpu_count() or 1
     bench_cpus = spark.sparkContext.defaultParallelism
 
-    def _measure(name: str) -> tuple[float, dict, bool]:
-        """One settle + warmup + median-of-`reps`-clean-passes
-        measurement; returns (median, env_record, contaminated).
+    def _measure(name: str, setup) -> tuple[float, dict, bool]:
+        """One setup + settle + warmup + median-of-`reps`-clean-passes
+        measurement of an entry (see `_query_entry` and the e2e entry
+        functions for the setup/prepare/pass shape); returns (median,
+        env_record, contaminated).
 
         Every pass carries its own CPU attribution; a pass during
         which EXTERNAL processes burned more than a quarter of the
@@ -805,52 +709,57 @@ def main() -> None:
         the timed passes' total foreign CPU exceeds 35% of the
         entry's own timed CPU (and >10 CPU-s absolute, so the
         always-on ~1-core background agent never trips a sub-second
-        entry), the entry is re-measured once like the streaming
-        retry."""
-        settled_s, busy = _settle(settle_cap, settle_busy)
-        gc0, comp0 = _jvm_counters()
-        heap0 = _heap_used_mb()
-        try:
-            load1_pre = round(os.getloadavg()[0], 2)
-        except OSError:  # pragma: no cover
-            load1_pre = None
+        entry), the entry is re-measured once."""
+        with ExitStack() as stack:
+            prepare = setup(spark, sf_dir, stack)
+            settled_s, busy = _settle(settle_cap, settle_busy)
+            gc0, comp0 = _jvm_counters()
+            heap0 = _heap_used_mb()
+            try:
+                load1_pre = round(os.getloadavg()[0], 2)
+            except OSError:  # pragma: no cover
+                load1_pre = None
 
-        def timed_pass() -> tuple[float, object, object, object]:
-            with _CpuAttribution() as cpu:
-                t = run_once(name)
-            return t, cpu.ours_s, cpu.other_s, cpu.steal_s
+            def timed_pass() -> tuple[float, object, object, object]:
+                with ExitStack() as pass_stack:
+                    run = prepare(pass_stack)
+                    with _CpuAttribution() as cpu:
+                        t0 = time.perf_counter()
+                        run()
+                        t = time.perf_counter() - t0
+                return t, cpu.ours_s, cpu.other_s, cpu.steal_s
 
-        ours0 = _tree_cpu_s()
-        steal_total = 0.0
-        other_total = 0.0
-        first, _, fother, fsteal = timed_pass()
-        steal_total += fsteal or 0.0
-        other_total += fother or 0.0
-        clean: list[float] = []
-        dirty: list[tuple[float, float]] = []
-        timed_ours = 0.0  # own / foreign CPU during the TIMED passes
-        timed_foreign = 0.0  # only — the warmup is not the number
-        attempts = 0
-        while not cold and len(clean) < reps and attempts < reps + 2:
-            attempts += 1
-            t, ours, other, steal = timed_pass()
-            steal_total += steal or 0.0
-            other_total += other or 0.0
-            timed_ours += ours or 0.0
-            timed_foreign += (other or 0.0) + (steal or 0.0)
-            # a pass is contaminated when EITHER guest-visible foreign
-            # processes or hypervisor steal burned >25% of the machine
-            # for its duration — both mean the pass measured the
-            # environment, not the code
-            lim = 0.25 * host_cpus * t
-            foreign = max(other or 0.0, steal or 0.0)
-            if foreign > lim:
-                dirty.append((t, foreign))
-            else:
-                clean.append(t)
-        times = clean if clean else [t for t, _ in dirty]
-        ours1 = _tree_cpu_s()
-        gc1, comp1 = _jvm_counters()
+            ours0 = _tree_cpu_s()
+            steal_total = 0.0
+            other_total = 0.0
+            first, _, fother, fsteal = timed_pass()
+            steal_total += fsteal or 0.0
+            other_total += fother or 0.0
+            clean: list[float] = []
+            dirty: list[tuple[float, float]] = []
+            timed_ours = 0.0  # own / foreign CPU during the TIMED passes
+            timed_foreign = 0.0  # only — the warmup is not the number
+            attempts = 0
+            while not cold and len(clean) < reps and attempts < reps + 2:
+                attempts += 1
+                t, ours, other, steal = timed_pass()
+                steal_total += steal or 0.0
+                other_total += other or 0.0
+                timed_ours += ours or 0.0
+                timed_foreign += (other or 0.0) + (steal or 0.0)
+                # a pass is contaminated when EITHER guest-visible foreign
+                # processes or hypervisor steal burned >25% of the machine
+                # for its duration — both mean the pass measured the
+                # environment, not the code
+                lim = 0.25 * host_cpus * t
+                foreign = max(other or 0.0, steal or 0.0)
+                if foreign > lim:
+                    dirty.append((t, foreign))
+                else:
+                    clean.append(t)
+            times = clean if clean else [t for t, _ in dirty]
+            ours1 = _tree_cpu_s()
+            gc1, comp1 = _jvm_counters()
         rec = {
             "load1_pre": load1_pre,
             "busy_pre": round(busy, 3),
@@ -891,15 +800,15 @@ def main() -> None:
         median = first if cold else sorted(times)[len(times) // 2]
         return median, rec, contaminated
 
-    def run_steady(name: str) -> float:
-        median, rec, contaminated = _measure(name)
+    def run_steady(name: str, setup) -> float:
+        median, rec, contaminated = _measure(name, setup)
         if contaminated:
-            # one full re-measure (settle + warmup + passes), mirroring
-            # the streaming retry: report the second number, keep the
-            # first attempt's complete record for adjudication. If the
-            # machine is STILL dirty the rerun keeps its own
-            # `contaminated` flag and the JSON shows why.
-            median2, rec2, _ = _measure(name)
+            # one full re-measure (setup + settle + warmup + passes):
+            # report the second number, keep the first attempt's
+            # complete record for adjudication. If the machine is STILL
+            # dirty the rerun keeps its own `contaminated` flag and the
+            # JSON shows why.
+            median2, rec2, _ = _measure(name, setup)
             rec2["first_attempt"] = rec
             query_env[name] = rec2
             return median2
@@ -910,11 +819,14 @@ def main() -> None:
     # round's perf signal — record {"error": ...} and keep timing the rest
     timings: dict[str, object] = {}
     errors: dict[str, str] = {}
-    for name in HEADLINE:
-        if name not in QUERIES or (only and name not in only):
+    entries = [
+        (name, _query_entry(QUERIES[name])) for name in HEADLINE if name in QUERIES
+    ] + E2E
+    for name, setup in entries:
+        if only and name not in only:
             continue
         try:
-            timings[name] = round(run_steady(name), 4)
+            timings[name] = round(run_steady(name, setup), 4)
         except Exception as exc:  # noqa: BLE001 — bench must always emit JSON
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
         finally:
@@ -948,79 +860,6 @@ def main() -> None:
             # work. BENCH_GC=0 restores the old behavior.
             if os.environ.get("BENCH_GC", "1") == "1":
                 spark.sparkContext._jvm.System.gc()
-
-    # The streaming/etl e2e entries run LAST in the official order, by
-    # which point r9/r10 showed 2-3x inflation vs quiet medians with
-    # untouched code (etl_stream_availablenow 7.33 s official vs
-    # 2.50 s quiet in r10). They spawn their own microbatch threads
-    # and pay checkpoint I/O, so they are the most contention-
-    # sensitive — give each a LONGER settle budget than the headline
-    # entries and record the same attribution block.
-    stream_settle_cap = float(os.environ.get("BENCH_SETTLE_STREAM_S", "90"))
-    for name, fn in (
-        ("etl_pipeline_batch", bench_etl_pipeline),
-        ("etl_stream_availablenow", bench_etl_stream),
-        ("stream_session_window", bench_stream_session_window),
-        ("stream_dedup_watermark", bench_stream_dedup_watermark),
-        ("curation_pipeline_batch", bench_curation_pipeline),
-        ("stream_incremental_dedup", bench_stream_incremental_dedup),
-    ):
-        if only and name not in only:
-            continue
-        settled_s, busy = _settle(stream_settle_cap, settle_busy)
-        gc0, comp0 = _jvm_counters()
-        heap0 = _heap_used_mb()
-        try:
-            load1_pre = round(os.getloadavg()[0], 2)
-        except OSError:  # pragma: no cover
-            load1_pre = None
-        retried = None
-        try:
-            with _CpuAttribution() as cpu:
-                elapsed = fn(spark, sf_dir)
-            # These e2e entries are SINGLE-pass — no median to absorb
-            # an outlier, which is why they are the repeat offenders
-            # in late-run official records (r9/r10 weak sets). If the
-            # machine ran substantial EXTERNAL work during the pass
-            # (foreign CPU exceeding a quarter of the machine for the
-            # entry's duration — an always-on ~1-core background agent
-            # is normal here and does not inflate a 32-thread run),
-            # the number measured the competitor, not the code: settle
-            # and rerun once, report the clean pass, and keep the
-            # contaminated one in the JSON for adjudication.
-            contam = 0.25 * host_cpus * elapsed
-            foreign = max(cpu.other_s or 0.0, cpu.steal_s or 0.0)
-            if foreign > contam:
-                # record the two contamination sources separately: a
-                # steal-triggered retry mislabeled as foreign-process
-                # CPU undermines adjudicability (ADVICE r11)
-                retried = {
-                    "first_run_s": round(elapsed, 4),
-                    "first_cpu_other_s": round(cpu.other_s or 0.0, 2),
-                    "first_steal_s": round(cpu.steal_s or 0.0, 2),
-                }
-                _settle(stream_settle_cap, settle_busy)
-                with _CpuAttribution() as cpu:
-                    elapsed = fn(spark, sf_dir)
-            timings[name] = round(elapsed, 4)
-        except Exception as exc:  # noqa: BLE001
-            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-        gc1, comp1 = _jvm_counters()
-        query_env[name] = {
-            "load1_pre": load1_pre,
-            "busy_pre": round(busy, 3),
-            "settle_s": round(settled_s, 1),
-            "gc_delta_s": round(gc1 - gc0, 3),
-            "janino_delta_s": round(comp1 - comp0, 3)
-            if comp1 == comp1 and comp0 == comp0
-            else None,
-            "heap_pre_mb": round(heap0),
-            "cpu_ours_s": None if cpu.ours_s is None else round(cpu.ours_s, 2),
-            "cpu_other_s": None if cpu.other_s is None else round(cpu.other_s, 2),
-            "steal_s": None if cpu.steal_s is None else round(cpu.steal_s, 2),
-        }
-        if retried:
-            query_env[name]["retried"] = retried
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # machine-load provenance (VERDICT r6 item 7): r5->r6 showed a

@@ -1072,6 +1072,40 @@ def _parse_backed(df: DataFrame) -> bool:
         return True
 
 
+def _where_input(df: DataFrame, wheres: list) -> DataFrame:
+    """The frame that a view's or aggregate's `where` filters apply
+    to: `df` itself, or `df` behind a parse pushdown barrier when it
+    is parse-backed and there is a filter to push."""
+    if not wheres or not _parse_backed(df):
+        return df
+    # Pushdown barrier (the optimizer-duplication trap, applied to
+    # expressions): a `where` filter over a frame whose
+    # columns come from an in-plan from_json/from_xml projection
+    # otherwise gets pushed below that projection, re-substituting
+    # the parse into the predicate — Catalyst then prunes that
+    # copy's schema to the referenced field and every row pays a
+    # SECOND full JSON lex just to evaluate the filter (measured:
+    # viewdef_observation_components carried
+    # `from_json(status).status = final` inside its Filter node,
+    # plans/r12/viewdef_observation_components_before.txt node 5).
+    # A one-element explode re-emits every row through a Generate;
+    # predicates referencing generator output are not pushed below
+    # it, so the parse stays single-evaluation. Row set unchanged:
+    # explode of a 1-element array is exactly one row per row.
+    # Applied ONLY to parse-backed frames: over a STORED table the
+    # same barrier would BLOCK the pushdown we want — scalar
+    # predicates into the parquet scan and column pruning out of
+    # it (pinned by test_extension_frame_still_prunes_from_parquet).
+    packed = df.select(
+        F.explode(
+            F.array(F.struct(*[F.col(c) for c in df.columns]))
+        ).alias("__vd_row")
+    )
+    return packed.select(
+        *[F.col("__vd_row")[c].alias(c) for c in df.columns]
+    )
+
+
 def compile_view(
     view: dict,
     encoded: DataFrame,
@@ -1103,35 +1137,8 @@ def compile_view(
         # extension('url') paths against the widened schema
         schema = schema_for(rtype, include_extensions=True)
 
-    df = encoded
     wheres = view.get("where", []) or []
-    if wheres and _parse_backed(df):
-        # Pushdown barrier (guide §4.4's optimizer-duplication trap,
-        # applied to expressions): a `where` filter over a frame whose
-        # columns come from an in-plan from_json/from_xml projection
-        # otherwise gets pushed below that projection, re-substituting
-        # the parse into the predicate — Catalyst then prunes that
-        # copy's schema to the referenced field and every row pays a
-        # SECOND full JSON lex just to evaluate the filter (measured:
-        # viewdef_observation_components carried
-        # `from_json(status).status = final` inside its Filter node,
-        # plans/r12/viewdef_observation_components_before.txt node 5).
-        # A one-element explode re-emits every row through a Generate;
-        # predicates referencing generator output are not pushed below
-        # it, so the parse stays single-evaluation. Row set unchanged:
-        # explode of a 1-element array is exactly one row per row.
-        # Applied ONLY to parse-backed frames: over a STORED table the
-        # same barrier would BLOCK the pushdown we want — scalar
-        # predicates into the parquet scan and column pruning out of
-        # it (pinned by test_extension_frame_still_prunes_from_parquet).
-        packed = df.select(
-            F.explode(
-                F.array(F.struct(*[F.col(c) for c in df.columns]))
-            ).alias("__vd_row")
-        )
-        df = packed.select(
-            *[F.col("__vd_row")[c].alias(c) for c in df.columns]
-        )
+    df = _where_input(encoded, wheres)
     for w in wheres:
         mo = _MEMBEROF_RE.match(w["path"].strip())
         if mo:
@@ -1325,8 +1332,9 @@ def compile_aggregate(spec: dict, encoded: DataFrame) -> DataFrame:
     if "extension" in encoded.columns:
         schema = schema_for(rtype, include_extensions=True)
 
-    df = encoded
-    for w in spec.get("where", []) or []:
+    wheres = spec.get("where", []) or []
+    df = _where_input(encoded, wheres)
+    for w in wheres:
         df = df.filter(_predicate(w["path"], schema))
 
     groupings = spec.get("grouping", []) or []

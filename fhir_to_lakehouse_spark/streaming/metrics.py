@@ -38,7 +38,13 @@ def _labels(**kv: str) -> Labels:
 class GaugeSnapshot:
     """Last-value-wins gauge store, the in-process stand-in for the
     reference's OTel meter. ``get(metric, **labels)`` reads one gauge;
-    ``items()`` iterates for export."""
+    ``items()`` lists them for export.
+
+    Single writer: only the owning ``ThroughputListener``'s listener
+    thread calls ``set()``. Readers such as ``PrometheusBridge.push``
+    run on other threads, so ``items()`` and ``with_metric()`` return
+    copies: iterating the live dict while the listener adds a new
+    label set raises "dictionary changed size during iteration"."""
 
     def __init__(self):
         self._values: dict[tuple[str, Labels], float] = {}
@@ -49,12 +55,12 @@ class GaugeSnapshot:
     def get(self, metric: str, **labels: str) -> float | None:
         return self._values.get((metric, _labels(**labels)))
 
-    def items(self):
-        return self._values.items()
+    def items(self) -> list[tuple[tuple[str, Labels], float]]:
+        return list(self._values.items())
 
     def with_metric(self, metric: str) -> dict[Labels, float]:
         return {
-            labels: v for (m, labels), v in self._values.items() if m == metric
+            labels: v for (m, labels), v in self.items() if m == metric
         }
 
 

@@ -39,7 +39,6 @@ def test_bench_emits_json_despite_query_failure(
     )
     monkeypatch.setenv("BENCH_QUIET_WAIT_S", "0")
     monkeypatch.setenv("BENCH_SETTLE_WAIT_S", "0")
-    monkeypatch.setenv("BENCH_SETTLE_STREAM_S", "0")
     monkeypatch.setenv("BENCH_DIAG_PATH", str(tmp_path / "BENCH_DIAG.json"))
     monkeypatch.setattr(
         "fhir_to_lakehouse_spark.plans.QUERIES", broken, raising=True
@@ -66,8 +65,14 @@ def test_bench_emits_json_despite_query_failure(
     # its machine/JVM attribution; queries stays {name: number}
     qe = out["query_env"]
     assert "q1_pricing_summary" in qe
-    for key in ("busy_pre", "settle_s", "gc_delta_s", "heap_pre_mb"):
+    for key in (
+        "busy_pre", "settle_s", "gc_delta_s", "heap_pre_mb",
+        "warmup_s", "passes_s", "rejected_passes",
+    ):
         assert key in qe["q1_pricing_summary"]
+    # one measurement protocol for every entry: an e2e entry's record
+    # has exactly the headline record's fields, not a second harness's
+    assert qe["etl_pipeline_batch"].keys() == qe["q1_pricing_summary"].keys()
     assert all(
         isinstance(v, (int, float)) for v in out["queries"].values()
     )

@@ -373,3 +373,19 @@ def test_histogram_snapshot_reads_are_copies():
     assert len(hist.items()) == 2
     assert hist.get("op_seconds", operation="absent") is None
 
+
+def test_gauge_items_survive_a_new_label_set_mid_export():
+    """The listener thread may add a label set (a new query, topic or
+    partition) while PrometheusBridge.push iterates items() on another
+    thread: the export must read a copy, not the live dict."""
+    from fhir_to_lakehouse_spark.streaming.metrics import GaugeSnapshot
+
+    g = GaugeSnapshot()
+    g.set(ROWS_PER_SECOND, 1.0, query_name="a")
+    g.set(ROWS_PER_SECOND, 2.0, query_name="b")
+    exported = []
+    for key, value in g.items():
+        g.set(ROWS_PER_SECOND, 3.0, query_name=f"new{len(exported)}")
+        exported.append((key, value))
+    assert [v for _, v in exported] == [1.0, 2.0]
+    assert len(g.with_metric(ROWS_PER_SECOND)) == 4

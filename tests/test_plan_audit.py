@@ -178,20 +178,45 @@ def test_no_reinlined_tokenizer_in_explode_plans(spark, sf_dir):
         )
 
 
-def _exec_node_names(df) -> list[str]:
-    """Physical-plan node class names via a tree walk. Unlike
-    plan-string matching, this excludes the internals of cached
-    relations: an InMemoryTableScanExec has no children in the plan
-    tree (its cached plan is a field), so the exchanges that BUILT a
-    cache are not counted against the query that READS it."""
+def _exec_nodes(df) -> list:
+    """Physical-plan nodes via a tree walk. Unlike plan-string
+    matching, this excludes the internals of cached relations: an
+    InMemoryTableScanExec has no children in the plan tree (its cached
+    plan is a field), so the exchanges that BUILT a cache are not
+    counted against the query that READS it."""
     def walk(node):
-        out = [node.getClass().getSimpleName()]
+        out = [node]
         ch = node.children()
         for i in range(ch.size()):
             out += walk(ch.apply(i))
         return out
 
     return walk(df._jdf.queryExecution().sparkPlan())
+
+
+def _exec_node_names(df) -> list[str]:
+    return [n.getClass().getSimpleName() for n in _exec_nodes(df)]
+
+
+@pytest.mark.parametrize(
+    "name", sorted(n for n in QUERIES if n.startswith("viewdef_"))
+)
+def test_viewdef_filters_never_parse(spark, sf_dir, name):
+    """A `where` over the bundle decode chain must filter the parsed
+    columns, not a second copy of the parse: Catalyst pushes a plain
+    filter below the from_json/from_xml projection, and every row then
+    pays another wire-format parse inside the Filter (compile_view and
+    compile_aggregate share the barrier that prevents it). Walks the
+    pre-AQE sparkPlan(): under AQE the executedPlan root is a leaf
+    AdaptiveSparkPlanExec, so walking it would check nothing."""
+    df = QUERIES[name](spark, sf_dir)
+    conds = [
+        n.condition().toString()
+        for n in _exec_nodes(df)
+        if n.getClass().getSimpleName() == "FilterExec"
+    ]
+    bad = [c for c in conds if "from_json" in c or "from_xml" in c]
+    assert not bad, f"{name}: Filter re-parses the resource: {bad}"
 
 
 def test_iterative_graph_join_strategy_shapes(spark):

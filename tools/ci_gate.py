@@ -1,22 +1,26 @@
 """One-command fast invariant gate (VERDICT r4 item 8).
 
-Runs the three checks that prove the library's core invariants, in
-under five minutes, so every round's FIRST commit can re-establish
-them before any new work:
+Runs the four checks that prove the library's core invariants (about
+eight minutes on a 4-core host, five for --fast), so every round's
+FIRST commit can re-establish them before any new work:
 
 1. full oracle harness at sf0.001 (every registered query vs its
    DuckDB oracle — rows, columns, value multiset);
 2. whole-library plan audit (no CartesianProduct, no rogue
    BroadcastNestedLoopJoin, lineage-truncated iterative plans,
-   WindowGroupLimit / join-strategy shapes);
+   WindowGroupLimit / join-strategy shapes, no JSON parse inside a
+   view's Filter);
 3. the bundle-pipeline truth table (the reference's conflict-
    resolution goldens + encoder round-trips) and the stream's
-   crash-recovery replays.
+   crash-recovery replays;
+4. the bench harness: bench.py still emits its one JSON line (tail
+   contract included) when an entry fails, and a headline and an
+   end-to-end entry carry the same per-entry record.
 
 Usage:
 
-    python tools/ci_gate.py            # all three, fail-fast off
-    python tools/ci_gate.py --fast     # skip the truth table (~2 min)
+    python tools/ci_gate.py            # all four, fail-fast off
+    python tools/ci_gate.py --fast     # only the first two
 
 Exit code 0 only if every stage passes. Each stage runs in a
 subprocess so one stage's Spark session state can't leak into the
@@ -56,6 +60,10 @@ STAGES = [
             "tests/test_crash_recovery_stream.py",
             "-q",
         ],
+    ),
+    (
+        "bench-harness",
+        [sys.executable, "-m", "pytest", "tests/test_bench_isolation.py", "-q"],
     ),
 ]
 
