@@ -16,7 +16,15 @@ Two backends behind one API:
 - **Parquet fallback** (this container): copy-on-write rewrite —
   new = batch ∪ (existing ⟕anti batch). Correct same semantics;
   rewrite cost is proportional to table size, which is acceptable for
-  tests and clearly documented as the non-Delta degradation.
+  tests and clearly documented as the non-Delta degradation. Every
+  rewrite writes at most ``max(1, ceil(B / split))`` files, B being
+  the on-disk parquet bytes of the table it replaces and split
+  Spark's ``spark.sql.files.maxPartitionBytes``: the table stays a few
+  split-sized files instead of one small file per upstream partition
+  (each zstd file carries a footer of several KB, and a lookup opens
+  every file). The whole table is still rewritten on every merge;
+  rewriting only the key buckets a batch touches is ROADMAP item 4,
+  and it pays only once a table is many split-sized files.
 
 Write atomicity in the fallback: write to ``<path>.tmp-<n>`` then swap
 directories, so a reader never sees a half-written table.
@@ -397,6 +405,11 @@ class KeyedTable:
         rewrite in the parquet fallback (reference
         /root/reference/src/bundle_processor.py:310).
 
+        Without ``zorder_by`` the fallback rewrites only a table with
+        more files than ``target_files`` (default: the file-count
+        target of :meth:`_swap_write`); a compact table costs one
+        directory listing and no Spark job.
+
         With ``zorder_by``, the fallback performs the real OPTIMIZE
         ZORDER BY layout change: numeric dimensions are normalized to
         bucket ordinals against their observed min/max (one aggregate
@@ -418,15 +431,17 @@ class KeyedTable:
             return
         if not self.exists():
             return
-        df = self.to_df()
         if zorder_by:
+            df = self.to_df()
             zkey = self._zorder_expr(df, zorder_by)
             df = df.repartitionByRange(
                 target_files or 1, zkey
             ).sortWithinPartitions(zkey)
             self._swap_write(df, presorted=True)
-        else:
-            self._swap_write(df.coalesce(target_files or 1))
+            return
+        n_files = target_files or self._target_files(self.spark)
+        if self.detail()["numFiles"] > n_files:
+            self._swap_write(self.to_df(), n_files=n_files)
 
     def _zorder_expr(self, df: DataFrame, cols: list[str]):
         """Morton key over min/max-normalized numeric columns; string
@@ -684,21 +699,55 @@ class KeyedTable:
 
     # -- internals -------------------------------------------------------
 
-    def _swap_write(self, df: DataFrame, presorted: bool = False) -> None:
+    def _target_files(self, spark: SparkSession) -> int:
+        """File-count target of a rewrite: ``max(1, ceil(B / split))``,
+        where B is the on-disk parquet bytes of the table being
+        replaced (0 when there is none) and split is Spark's own read
+        split size, ``spark.sql.files.maxPartitionBytes``."""
+        try:
+            names = os.listdir(self._os_path)
+        except OSError:
+            return 1
+        size = sum(
+            os.path.getsize(os.path.join(self._os_path, n))
+            for n in names
+            if n.endswith(".parquet")
+        )
+        split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        return max(1, -(-size // split))
+
+    def _swap_write(
+        self,
+        df: DataFrame,
+        presorted: bool = False,
+        n_files: int | None = None,
+    ) -> None:
         """Copy-on-write directory swap. Readers see the old or the new
         table, never a partial write. The swap itself is two renames,
         so a crash between them can leave ``path`` momentarily absent —
         :meth:`_recover_stranded` (run by exists()/vacuum()) restores
         the pre-swap directory in that window, so no committed rows are
-        ever lost."""
+        ever lost.
+
+        Unless the caller lays the files out itself (``presorted``),
+        the write is coalesced to ``n_files`` (default
+        :meth:`_target_files`) and each file is sorted by key. A
+        coalesce never shuffles and never adds partitions, so a plan
+        with fewer partitions writes fewer files. The first write of a
+        table (no table, or the empty one create_if_not_exists wrote)
+        is one file: it is one micro-batch, which the stream's
+        maxOffsetsPerTrigger bounds. The whole table is still rewritten;
+        bucketed partial rewrite is ROADMAP item 4."""
         self._known_empty = False
         suffix = f".tmp-{uuid.uuid4().hex[:8]}"
-        if not presorted and self.key in df.columns:
-            # sorted by key within each file: tight min/max statistics
-            # (and row groups) INSIDE a file. Plain parquet has no
-            # file-level key index, so a point lookup still opens every
-            # file of the table; only Delta's data skipping prunes files
-            df = df.sortWithinPartitions(self.key)
+        if not presorted:
+            df = df.coalesce(n_files or self._target_files(df.sparkSession))
+            if self.key in df.columns:
+                # sorted by key within each file: tight min/max statistics
+                # (and row groups) INSIDE a file. Plain parquet has no
+                # file-level key index, so a point lookup still opens every
+                # file of the table; only Delta's data skipping prunes files
+                df = df.sortWithinPartitions(self.key)
         # Spark writes via the URI form; the renames below are plain
         # filesystem moves on the local equivalent
         df.write.mode("overwrite").parquet(f"{self.path.rstrip('/')}{suffix}")

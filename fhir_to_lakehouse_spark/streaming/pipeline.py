@@ -339,10 +339,7 @@ class BundlePipeline:
             self._dead_letter_resources(
                 puts.filter(F.col("invalid")), resource_type, batch_id
             )
-        if n_valid or n_invalid:
-            # an all-invalid type still merges its empty valid set, which
-            # rewrites the parquet table: on small trickle batches that
-            # rewrite is what compacts the table's files today
+        if n_valid:  # an all-invalid type leaves its table untouched
             with self._timed("merge", resource_type):
                 tbl.merge_upsert(encoded)
         if n_deletes and existed_before:

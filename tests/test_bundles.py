@@ -382,6 +382,61 @@ def test_unparseable_inner_resource_dead_lettered_not_merged(spark, pipeline):
     assert "definitely not json" in corrupt[0]["raw_resource"]
 
 
+def test_all_invalid_batch_writes_no_table_file(spark, pipeline):
+    """A batch whose every PUT is invalid dead-letters them and leaves
+    the keyed tables alone: the same files and the same _SUCCESS
+    stamp, so no rewrite ran."""
+    import json
+    import os
+
+    pipeline.process_batch(
+        batch(
+            spark,
+            [
+                {"value": put_bundle("Patient", "p1", active=True), "offset": 0},
+                {"value": put_bundle("Observation", "o1", status="final"), "offset": 1},
+            ],
+        ),
+        batch_id=1,
+    )
+
+    def snapshot():
+        out = {}
+        for rt in ("Patient", "Observation"):
+            path = pipeline.table(rt)._os_path
+            st = os.stat(os.path.join(path, "_SUCCESS"))
+            out[rt] = (sorted(os.listdir(path)), st.st_ino, st.st_mtime_ns)
+        return out
+
+    before = snapshot()
+    bad = [
+        json.dumps(
+            {
+                "resourceType": "Bundle",
+                "type": "transaction",
+                "entry": [
+                    {
+                        "resource": "{not json",
+                        "request": {"method": "PUT", "url": f"{rt}/x{i}"},
+                    }
+                ],
+            }
+        )
+        for i, rt in enumerate(("Patient", "Observation"))
+    ]
+    pipeline.process_batch(
+        batch(spark, [{"value": v, "offset": 2 + i} for i, v in enumerate(bad)]),
+        batch_id=2,
+    )
+    assert snapshot() == before
+    dead = sorted(
+        (r["resource_type"], r["batch_id"])
+        for r in pipeline.corrupt_resources().collect()
+    )
+    assert dead == [("Observation", 2), ("Patient", 2)]
+    assert [r["id"] for r in pipeline.table("Patient").to_df().collect()] == ["p1"]
+
+
 def test_observation_component_array_decodes_typed(spark, pipeline):
     """§2.9 encoder depth (round 4): Observation.component (multi-part
     panels) and referenceRange decode into typed nested arrays; the

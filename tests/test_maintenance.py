@@ -14,12 +14,16 @@ SCHEMA = T.StructType(
 
 
 def seed(spark, tmp_path, names=("Patient", "Condition")):
+    """Two-row tables written straight as two parquet files each: a
+    KeyedTable merge would already write them compact, and optimize
+    must have something to compact."""
     wh = tmp_path / "wh"
     for n in names:
-        t = KeyedTable(spark, str(wh / f"{n}.parquet"))
-        t.merge_upsert(
-            spark.createDataFrame([("a", 1), ("b", 2)], SCHEMA).repartition(4)
-        )
+        path = str(wh / f"{n}.parquet")
+        spark.createDataFrame([("a", 1), ("b", 2)], SCHEMA).repartition(
+            2
+        ).write.parquet(path)
+        assert KeyedTable(spark, path).detail()["numFiles"] == 2
     return str(wh)
 
 

@@ -51,12 +51,86 @@ def test_create_if_not_exists_idempotent(spark, tmp_path):
     assert t.exists() and t.to_df().count() == 0
 
 
-def test_optimize_compacts_files(spark, tmp_path):
+def seed_files(spark, tmp_path, n_rows, n_files):
+    """A table written straight as ``n_files`` parquet files, the way a
+    writer other than KeyedTable (or an older layout) leaves it."""
     t = make(spark, tmp_path)
-    t.merge_upsert(df(spark, [(str(i), i) for i in range(100)]).repartition(8))
+    df(spark, [(f"{i:05d}", i) for i in range(n_rows)]).repartition(
+        n_files
+    ).write.parquet(t.path)
+    assert t.detail()["numFiles"] == n_files
+    return t
+
+
+def test_optimize_compacts_files(spark, tmp_path):
+    t = seed_files(spark, tmp_path, 100, 8)
     t.optimize(target_files=1)
     assert t.to_df().count() == 100
     assert t.detail()["numFiles"] == 1
+
+
+def test_optimize_on_compact_table_runs_no_job(spark, tmp_path):
+    """A table at its file-count target is left alone: the same
+    _SUCCESS inode (no swap) and no Spark job."""
+    import os
+
+    t = seed_files(spark, tmp_path, 100, 8)
+    t.optimize()
+    assert t.detail()["numFiles"] == 1
+    before = os.stat(os.path.join(t.path, "_SUCCESS"))
+    sc = spark.sparkContext
+    group = "test-optimize-compact-noop"
+    sc.setJobGroup(group, "optimize a compact table")
+    try:
+        t.optimize()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    after = os.stat(os.path.join(t.path, "_SUCCESS"))
+    assert (after.st_ino, after.st_mtime_ns) == (before.st_ino, before.st_mtime_ns)
+    assert t.to_df().count() == 100
+
+
+def test_merge_into_multi_file_table_writes_one_file(spark, tmp_path):
+    """A small table's rewrite is one file, whatever its input layout:
+    far below spark.sql.files.maxPartitionBytes, ceil(bytes/split)
+    is 1."""
+    t = seed_files(spark, tmp_path, 200, 8)
+    t.merge_upsert(df(spark, [("00001", -1), ("new", 7)]))
+    assert t.detail()["numFiles"] == 1
+    got = {r["id"]: r["v"] for r in t.to_df().collect()}
+    assert len(got) == 201 and got["00001"] == -1 and got["new"] == 7
+
+
+def test_rewrite_file_count_follows_split_size(spark, tmp_path):
+    """With a split size below the table's bytes, a rewrite writes
+    ceil(table bytes / split) files, each sorted by key. The source
+    is a Range, whose size statistic makes the anti-join a broadcast,
+    so the rewrite keeps the scan's 8 partitions to coalesce from (a
+    shuffled join would be coalesced to one partition by AQE first)."""
+    import glob
+    import math
+    import os
+
+    import pyarrow.parquet as pq
+
+    t = seed_files(spark, tmp_path, 3000, 8)
+    size = sum(os.path.getsize(f) for f in glob.glob(f"{t.path}/*.parquet"))
+    split = size // 3 + 1
+    key = "spark.sql.files.maxPartitionBytes"
+    orig = spark.conf.get(key)
+    spark.conf.set(key, str(split))
+    try:
+        t.merge_upsert(spark.range(1).selectExpr("'00007' AS id", "-7 AS v"))
+    finally:
+        spark.conf.set(key, orig)
+    files = sorted(glob.glob(f"{t.path}/*.parquet"))
+    assert len(files) == math.ceil(size / split) == 3
+    for f in files:
+        ids = pq.read_table(f, columns=["id"]).column("id").to_pylist()
+        assert ids and ids == sorted(ids)
+    assert t.to_df().count() == 3000
 
 
 def test_vacuum_noop_without_garbage(spark, tmp_path):

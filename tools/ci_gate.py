@@ -1,8 +1,8 @@
 """One-command fast invariant gate (VERDICT r4 item 8).
 
 Runs the four checks that prove the library's core invariants (about
-eight minutes on a 4-core host, five for --fast), so every round's
-FIRST commit can re-establish them before any new work:
+six minutes on a 4-core host, three and a half for --fast), so every
+round's FIRST commit can re-establish them before any new work:
 
 1. full oracle harness at sf0.001 (every registered query vs its
    DuckDB oracle — rows, columns, value multiset);
@@ -11,8 +11,9 @@ FIRST commit can re-establish them before any new work:
    WindowGroupLimit / join-strategy shapes, no JSON parse inside a
    view's Filter);
 3. the bundle-pipeline truth table (the reference's conflict-
-   resolution goldens + encoder round-trips) and the stream's
-   crash-recovery replays;
+   resolution goldens + encoder round-trips), the stream's
+   crash-recovery replays and the keyed-table sink goldens (merge,
+   delete, file-count target, compaction, swap recovery);
 4. the bench harness: bench.py still emits its one JSON line (tail
    contract included) when an entry fails, and a headline and an
    end-to-end entry carry the same per-entry record.
@@ -58,6 +59,7 @@ STAGES = [
             "tests/test_bundles.py",
             "tests/test_encoder_widened.py",
             "tests/test_crash_recovery_stream.py",
+            "tests/test_sink.py",
             "-q",
         ],
     ),
