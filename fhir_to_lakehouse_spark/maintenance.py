@@ -283,9 +283,13 @@ def migrate_references_all(
     changelog: it is a format migration, not a data change — pin or
     re-seed incremental consumers across it.
 
-    At scale this is one read + one write per table, no shuffle:
-    ``from_json`` is a per-row projection, so the plan is scan ->
-    project -> write with full parallelism."""
+    At scale this is one read + one write per table: ``from_json`` is
+    a per-row projection that runs with the scan's parallelism. The
+    write is sized like every keyed-table rewrite
+    (``KeyedTable._swap_write``): a table above
+    ``spark.sql.files.openCostInBytes`` is hashed by key into its
+    target file count, one shuffle after the projection; a smaller
+    one is coalesced."""
     import pyspark.sql.functions as F
 
     from fhir_to_lakehouse_spark.operators.bundles import encode_resources

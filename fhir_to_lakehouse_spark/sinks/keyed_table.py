@@ -16,13 +16,14 @@ Two backends behind one API:
 - **Parquet fallback** (this container): copy-on-write rewrite —
   new = batch ∪ (existing ⟕anti batch). Correct same semantics;
   rewrite cost is proportional to table size, which is acceptable for
-  tests and clearly documented as the non-Delta degradation. Every
-  rewrite writes at most ``max(1, ceil(B / split))`` files, B being
-  the on-disk parquet bytes of the table it replaces and split
-  Spark's ``spark.sql.files.maxPartitionBytes``: the table stays a few
-  split-sized files instead of one small file per upstream partition
-  (each zstd file carries a footer of several KB, and a lookup opens
-  every file). The whole table is still rewritten on every merge;
+  tests and clearly documented as the non-Delta degradation. A
+  rewrite of an existing table writes at most ``max(1, ceil(B /
+  split))`` files, B being the on-disk parquet bytes of the table it
+  replaces and split Spark's ``spark.sql.files.maxPartitionBytes``:
+  the table stays a few split-sized files instead of one small file
+  per upstream partition (each zstd file carries a footer of several
+  KB, and a lookup opens every file). A first write keeps its batch's
+  partitioning. The whole table is still rewritten on every merge;
   rewriting only the key buckets a batch touches is ROADMAP item 4,
   and it pays only once a table is many split-sized files.
 
@@ -405,10 +406,13 @@ class KeyedTable:
         rewrite in the parquet fallback (reference
         /root/reference/src/bundle_processor.py:310).
 
-        Without ``zorder_by`` the fallback rewrites only a table with
-        more files than ``target_files`` (default: the file-count
-        target of :meth:`_swap_write`); a compact table costs one
-        directory listing and no Spark job.
+        Without ``zorder_by`` the fallback is compaction only: it
+        rewrites a table with more files than ``target_files`` (default:
+        the file-count target of :meth:`_target_files`) into that many
+        key-sorted files, and leaves any other table as it is — one
+        directory listing, no Spark job. A table that another writer
+        left compact but unsorted stays unsorted; every rewrite through
+        this class sorts by key.
 
         With ``zorder_by``, the fallback performs the real OPTIMIZE
         ZORDER BY layout change: numeric dimensions are normalized to
@@ -437,11 +441,17 @@ class KeyedTable:
             df = df.repartitionByRange(
                 target_files or 1, zkey
             ).sortWithinPartitions(zkey)
-            self._swap_write(df, presorted=True)
-            return
-        n_files = target_files or self._target_files(self.spark)
-        if self.detail()["numFiles"] > n_files:
-            self._swap_write(self.to_df(), n_files=n_files)
+        else:
+            n_files, n_bytes = self._files()
+            target = target_files or self._target_files(self.spark, n_bytes)
+            if n_files <= target:
+                return
+            # the input is a plain scan: coalescing it leaves no
+            # encode or join to run in fewer tasks
+            df = self.to_df().coalesce(target)
+            if self.key in df.columns:
+                df = df.sortWithinPartitions(self.key)
+        self._swap_write(df, presorted=True)
 
     def _zorder_expr(self, df: DataFrame, cols: list[str]):
         """Morton key over min/max-normalized numeric columns; string
@@ -544,11 +554,7 @@ class KeyedTable:
                 .toJSON()
                 .collect()[0]
             )
-        n_files = (
-            len([f for f in os.listdir(self._os_path) if f.endswith(".parquet")])
-            if self.exists()
-            else 0
-        )
+        n_files = self._files()[0] if self.exists() else 0
         return {"location": self.path, "numFiles": n_files, "format": "parquet"}
 
     # -- change data feed (fallback analog of Delta CDF) -----------------
@@ -699,29 +705,45 @@ class KeyedTable:
 
     # -- internals -------------------------------------------------------
 
-    def _target_files(self, spark: SparkSession) -> int:
-        """File-count target of a rewrite: ``max(1, ceil(B / split))``,
-        where B is the on-disk parquet bytes of the table being
-        replaced (0 when there is none) and split is Spark's own read
-        split size, ``spark.sql.files.maxPartitionBytes``."""
+    def _files(self) -> tuple[int, int]:
+        """Number and total bytes of the table's parquet files on disk;
+        (0, 0) when there is no table directory."""
         try:
-            names = os.listdir(self._os_path)
+            with os.scandir(self._os_path) as entries:
+                sizes = [
+                    e.stat().st_size for e in entries if e.name.endswith(".parquet")
+                ]
         except OSError:
-            return 1
-        size = sum(
-            os.path.getsize(os.path.join(self._os_path, n))
-            for n in names
-            if n.endswith(".parquet")
-        )
-        split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-        return max(1, -(-size // split))
+            return 0, 0
+        return len(sizes), sum(sizes)
 
-    def _swap_write(
-        self,
-        df: DataFrame,
-        presorted: bool = False,
-        n_files: int | None = None,
-    ) -> None:
+    @staticmethod
+    def _target_files(spark: SparkSession, n_bytes: int) -> int:
+        """File-count target for ``n_bytes`` of parquet:
+        ``max(1, ceil(n_bytes / split))``, split being Spark's own read
+        split size, ``spark.sql.files.maxPartitionBytes``."""
+        split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        return max(1, -(-n_bytes // split))
+
+    def _right_size(self, df: DataFrame, n_bytes: int) -> DataFrame:
+        """``df`` in :meth:`_target_files` partitions for a rewrite of a
+        table of ``n_bytes``. At or below
+        ``spark.sql.files.openCostInBytes`` (4 MB by default), what
+        Spark's scan planning charges for opening one file, a second
+        task costs more than it saves: the plan is coalesced, which
+        adds no job, and the batch's encode runs in those tasks too.
+        Above it, the plan is hashed by key into that many partitions,
+        a shuffle (one more job) that keeps the scan, join and encode
+        above it parallel."""
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        n = self._target_files(df.sparkSession, n_bytes)
+        if n_bytes <= conf.filesOpenCostInBytes():
+            return df.coalesce(n)
+        if self.key in df.columns:
+            return df.repartition(n, self.key)
+        return df.repartition(n)
+
+    def _swap_write(self, df: DataFrame, presorted: bool = False) -> None:
         """Copy-on-write directory swap. Readers see the old or the new
         table, never a partial write. The swap itself is two renames,
         so a crash between them can leave ``path`` momentarily absent —
@@ -730,24 +752,26 @@ class KeyedTable:
         ever lost.
 
         Unless the caller lays the files out itself (``presorted``),
-        the write is coalesced to ``n_files`` (default
-        :meth:`_target_files`) and each file is sorted by key. A
-        coalesce never shuffles and never adds partitions, so a plan
-        with fewer partitions writes fewer files. The first write of a
-        table (no table, or the empty one create_if_not_exists wrote)
-        is one file: it is one micro-batch, which the stream's
-        maxOffsetsPerTrigger bounds. The whole table is still rewritten;
-        bucketed partial rewrite is ROADMAP item 4."""
-        self._known_empty = False
-        suffix = f".tmp-{uuid.uuid4().hex[:8]}"
+        each file is sorted by key, and a rewrite of an existing table
+        writes at most ``max(1, ceil(B / split))`` files
+        (:meth:`_right_size`), B being the on-disk bytes of the table
+        it replaces. A first write (no table, or the empty one this
+        instance's create_if_not_exists wrote) keeps its source's
+        partitioning: its size is the batch's, which B says nothing
+        about. The whole table is still rewritten; bucketed partial
+        rewrite is ROADMAP item 4."""
         if not presorted:
-            df = df.coalesce(n_files or self._target_files(df.sparkSession))
+            n_files, n_bytes = self._files()
+            if n_files and not self._fresh_empty():  # not a first write
+                df = self._right_size(df, n_bytes)
             if self.key in df.columns:
                 # sorted by key within each file: tight min/max statistics
                 # (and row groups) INSIDE a file. Plain parquet has no
                 # file-level key index, so a point lookup still opens every
                 # file of the table; only Delta's data skipping prunes files
                 df = df.sortWithinPartitions(self.key)
+        self._known_empty = False
+        suffix = f".tmp-{uuid.uuid4().hex[:8]}"
         # Spark writes via the URI form; the renames below are plain
         # filesystem moves on the local equivalent
         df.write.mode("overwrite").parquet(f"{self.path.rstrip('/')}{suffix}")

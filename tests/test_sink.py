@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import types as T
 
 from fhir_to_lakehouse_spark.sinks.keyed_table import KeyedTable
@@ -103,12 +104,15 @@ def test_merge_into_multi_file_table_writes_one_file(spark, tmp_path):
     assert len(got) == 201 and got["00001"] == -1 and got["new"] == 7
 
 
-def test_rewrite_file_count_follows_split_size(spark, tmp_path):
+@pytest.mark.parametrize("open_cost", [None, "1"], ids=["coalesce", "shuffle"])
+def test_rewrite_file_count_follows_split_size(spark, tmp_path, open_cost):
     """With a split size below the table's bytes, a rewrite writes
-    ceil(table bytes / split) files, each sorted by key. The source
-    is a Range, whose size statistic makes the anti-join a broadcast,
-    so the rewrite keeps the scan's 8 partitions to coalesce from (a
-    shuffled join would be coalesced to one partition by AQE first)."""
+    ceil(table bytes / split) files, each sorted by key: coalesced
+    while the table is under spark.sql.files.openCostInBytes, hashed
+    by key (``open_cost`` lowered below the table's bytes) above it.
+    The source is a Range, whose size statistic makes the anti-join a
+    broadcast, so the plan keeps the scan's 8 partitions for the
+    coalesce to merge (AQE would first coalesce a shuffled join)."""
     import glob
     import math
     import os
@@ -118,19 +122,37 @@ def test_rewrite_file_count_follows_split_size(spark, tmp_path):
     t = seed_files(spark, tmp_path, 3000, 8)
     size = sum(os.path.getsize(f) for f in glob.glob(f"{t.path}/*.parquet"))
     split = size // 3 + 1
-    key = "spark.sql.files.maxPartitionBytes"
-    orig = spark.conf.get(key)
-    spark.conf.set(key, str(split))
+    confs = {"spark.sql.files.maxPartitionBytes": str(split)}
+    if open_cost:
+        confs["spark.sql.files.openCostInBytes"] = open_cost
+    orig = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         t.merge_upsert(spark.range(1).selectExpr("'00007' AS id", "-7 AS v"))
     finally:
-        spark.conf.set(key, orig)
+        for k, v in orig.items():
+            spark.conf.set(k, v)
     files = sorted(glob.glob(f"{t.path}/*.parquet"))
     assert len(files) == math.ceil(size / split) == 3
     for f in files:
         ids = pq.read_table(f, columns=["id"]).column("id").to_pylist()
         assert ids and ids == sorted(ids)
     assert t.to_df().count() == 3000
+
+
+def test_first_write_keeps_source_partitioning(spark, tmp_path):
+    """A first write is sized by its batch, not by the empty table it
+    replaces: it keeps the source's partitions (each sorted by key),
+    so a large first batch is still encoded and written in parallel.
+    The next rewrite compacts it."""
+    t = make(spark, tmp_path)
+    t.create_if_not_exists(SCHEMA)
+    t.merge_upsert(df(spark, [(f"{i:05d}", i) for i in range(300)]).repartition(3))
+    assert t.detail()["numFiles"] == 3
+    t.merge_upsert(df(spark, [("new", 7)]))
+    assert t.detail()["numFiles"] == 1
+    assert t.to_df().count() == 301
 
 
 def test_vacuum_noop_without_garbage(spark, tmp_path):

@@ -1,7 +1,7 @@
 """One-command fast invariant gate (VERDICT r4 item 8).
 
-Runs the four checks that prove the library's core invariants (about
-six minutes on a 4-core host, three and a half for --fast), so every
+Runs the four checks that prove the library's core invariants (four
+to six minutes on a 4-core host, about three for --fast), so every
 round's FIRST commit can re-establish them before any new work:
 
 1. full oracle harness at sf0.001 (every registered query vs its
