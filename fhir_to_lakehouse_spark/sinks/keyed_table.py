@@ -29,6 +29,13 @@ Two backends behind one API:
 
 Write atomicity in the fallback: write to ``<path>.tmp-<n>`` then swap
 directories, so a reader never sees a half-written table.
+
+Reads in the fallback skip parquet schema inference (a Spark job per
+``spark.read.parquet``) while the table on disk is the one this
+instance last wrote or read: every write records the schema it wrote
+under the ``_SUCCESS`` marker's stamp, and a read whose stamp matches
+passes that schema to the reader. A table another writer replaced has
+a new stamp, so its schema is inferred once and recorded again.
 """
 
 from __future__ import annotations
@@ -42,8 +49,39 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from fhir_to_lakehouse_spark.session import delta_available
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every struct field, array element and map value made
+    nullable: the schema Spark's parquet writer stores for a frame of
+    type ``dt``, and so what reading the files back infers."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _stamp(os_path: str) -> tuple[int, int] | None:
+    """``(st_mtime_ns, st_ino)`` of the ``_SUCCESS`` marker under
+    ``os_path``, None when there is none. Every write replaces the
+    marker, so a new stamp means a new table; a directory rename keeps
+    the stamps of the files inside it."""
+    try:
+        st = os.stat(os.path.join(os_path, "_SUCCESS"))
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_ino
 
 
 class DuplicateKeySourceError(ValueError):
@@ -96,7 +134,15 @@ def retry(attempts: int = 5, base_s: float = 0.05, cap_s: float = 30.0):
 
 
 class KeyedTable:
-    """A mutable table keyed on ``key`` at ``path``."""
+    """A mutable table keyed on ``key`` at ``path``.
+
+    The parquet fallback assumes one writer per path. A write by
+    another writer (another instance or process) between two calls on
+    this one is detected by the ``_SUCCESS`` stamp: this instance then
+    infers the table's schema again and does not take its empty-table
+    fast path. A write by another writer that lands inside one call,
+    between its stamp check and its swap, is not detected, and one of
+    the two writes is lost."""
 
     # reference delta.* table-property defaults (settings.py:43-49,
     # applied at create: bundle_processor.py:172-196)
@@ -149,17 +195,16 @@ class KeyedTable:
         # merge also appends its row-level changes (_change_type +
         # commit_version) to <path>.changelog for incremental consumers
         self.changelog = changelog
-        # set when the parquet fallback just wrote a ZERO-ROW table via
-        # create_if_not_exists: the next merge_upsert can take the
+        # (stamp, schema) of the fallback table as this instance last
+        # wrote or read it; a read whose stamp matches skips schema
+        # inference (_read)
+        self._known: tuple[tuple[int, int], T.StructType] | None = None
+        # the known table is the ZERO-ROW one create_if_not_exists
+        # wrote: while its stamp holds, the next merge_upsert takes the
         # initial-write fast path instead of reading the empty table
         # back through the full anti-join/union machinery (a first
-        # batch on a fresh warehouse pays that per resource type).
-        # Any _swap_write clears it; _fresh_empty() re-validates the
-        # flag against the on-disk _SUCCESS stamp before the fast path
-        # trusts it, so a second writer to the same path is never
-        # clobbered (ADVICE r12).
+        # batch on a fresh warehouse pays that per resource type)
         self._known_empty = False
-        self._empty_stamp: tuple[int, int] | None = None
         self.table_properties = (
             dict(table_properties)
             if table_properties is not None
@@ -173,16 +218,29 @@ class KeyedTable:
         still what's on disk. The in-memory flag alone is not enough:
         another KeyedTable instance (or process) writing to the same
         path after our create_if_not_exists would be silently clobbered
-        by the fast-path _swap_write. One stat() of _SUCCESS re-validates
-        — any foreign _swap_write replaces the directory, giving the
-        marker a new inode/mtime."""
-        if not self._known_empty or self._empty_stamp is None:
-            return False
-        try:
-            st = os.stat(os.path.join(self._os_path, "_SUCCESS"))
-        except OSError:
-            return False
-        return (st.st_mtime_ns, st.st_ino) == self._empty_stamp
+        by the fast-path _swap_write; its write gives the table a new
+        stamp."""
+        known = self._known
+        return (
+            self._known_empty
+            and known is not None
+            and known[0] == _stamp(self._os_path)
+        )
+
+    def _read(self, session: SparkSession) -> DataFrame:
+        """The fallback table, read through ``session``. While the
+        stamp on disk is the one this instance recorded, the recorded
+        schema is passed to the reader: no inference job. Otherwise the
+        schema is inferred (one job) and recorded under the stamp taken
+        BEFORE the read, so a table replaced during it is inferred
+        again next time instead of trusted with the old stamp."""
+        stamp, known = _stamp(self._os_path), self._known
+        if known is not None and known[0] == stamp:
+            return session.read.schema(known[1]).parquet(self.path)
+        df = session.read.parquet(self.path)
+        if stamp is not None:
+            self._known, self._known_empty = (stamp, df.schema), False
+        return df
 
     def exists(self) -> bool:
         if self._delta:
@@ -221,7 +279,7 @@ class KeyedTable:
             from delta.tables import DeltaTable
 
             return DeltaTable.forPath(self.spark, self.path).toDF()
-        return self.spark.read.parquet(self.path)
+        return self._read(self.spark)
 
     # -- DDL -------------------------------------------------------------
 
@@ -251,15 +309,12 @@ class KeyedTable:
             # default-parallelism partitions and the commit protocol
             # pays per-task setup for dozens of empty writers (~2 s on
             # local[32] for a zero-row table; one task is ~0.4 s)
-            self.spark.createDataFrame([], schema).repartition(1).write.mode(
-                "overwrite"
-            ).parquet(self.path)
-            try:
-                st = os.stat(os.path.join(self._os_path, "_SUCCESS"))
-                self._empty_stamp = (st.st_mtime_ns, st.st_ino)
+            empty = self.spark.createDataFrame([], schema)
+            empty.repartition(1).write.mode("overwrite").parquet(self.path)
+            stamp = _stamp(self._os_path)
+            if stamp is not None:  # no marker: no fast path, reads infer
+                self._known = (stamp, _nullable(empty.schema))
                 self._known_empty = True
-            except OSError:  # pragma: no cover — marker missing: no fast path
-                self._known_empty = False
 
     # -- MERGE -----------------------------------------------------------
 
@@ -318,7 +373,7 @@ class KeyedTable:
         # the first post-create merge). Executing the whole merge in
         # the caller's session is also simply correct — its confs are
         # the ones in force for this batch.
-        existing = src.sparkSession.read.parquet(self.path)
+        existing = self._read(src.sparkSession)
         if self.changelog:
             matched_keys = src.select(self.key).distinct()
             pre = existing.join(matched_keys, on=self.key, how="left_semi")
@@ -361,7 +416,8 @@ class KeyedTable:
             return
         if not self.exists():
             return
-        existing = self.to_df()
+        # the ids' session, like merge_upsert's read of the table
+        existing = self._read(ids.sparkSession)
         if self.changelog:
             deleted = existing.join(
                 ids.select(F.col(id_col).alias(self.key)),
@@ -770,14 +826,18 @@ class KeyedTable:
                 # file-level key index, so a point lookup still opens every
                 # file of the table; only Delta's data skipping prunes files
                 df = df.sortWithinPartitions(self.key)
-        self._known_empty = False
         suffix = f".tmp-{uuid.uuid4().hex[:8]}"
         # Spark writes via the URI form; the renames below are plain
         # filesystem moves on the local equivalent
         df.write.mode("overwrite").parquet(f"{self.path.rstrip('/')}{suffix}")
         tmp_os = f"{self._os_path.rstrip('/')}{suffix}"
+        # stamped before the swap: the renames keep it, and a table
+        # another writer swaps in after ours never carries it
+        stamp = _stamp(tmp_os)
         old = f"{self._os_path.rstrip('/')}.tmp-old-{uuid.uuid4().hex[:8]}"
         if os.path.exists(self._os_path):
             os.rename(self._os_path, old)
         os.rename(tmp_os, self._os_path)
         shutil.rmtree(old, ignore_errors=True)
+        self._known = None if stamp is None else (stamp, _nullable(df.schema))
+        self._known_empty = False

@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -37,3 +39,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return TEST_SF_DIR
+
+
+@contextlib.contextmanager
+def jobs_in(spark):
+    """Count the Spark jobs a block runs: yields a list that holds, once
+    the block exits, the ids of the jobs started under a job group set
+    for the block. Threads started with ``inheritable_thread_target``
+    (the pipeline's type pool) carry the group into their jobs."""
+    sc = spark.sparkContext
+    group = f"jobs-in-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "counted block")
+    jobs: list[int] = []
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))

@@ -11,6 +11,7 @@ from fhir_to_lakehouse_spark.operators.bundles import (
     prepare_stream,
 )
 from fhir_to_lakehouse_spark.streaming.pipeline import BundlePipeline, PipelineConfig
+from tests.conftest import jobs_in
 from tests.fixtures import KAFKA_SCHEMA, delete_bundle, kafka_row, put_bundle
 
 
@@ -630,9 +631,12 @@ def test_type_pool_lands_expected_tables(spark, pipeline):
 
 # Spark jobs of test_mixed_batch_job_count's batch, as measured: the
 # two caches, the one count and the corrupt probe, then only writes.
-# A probe job added per type (a persisted dedup, a winners aggregate,
-# a validity check) pushes it past this.
-MIXED_BATCH_MAX_JOBS = 21
+# Its four table reads (Patient merge and delete, Observation merge,
+# Condition delete) use the schema the tables' last write recorded,
+# so none runs a schema-inference job. A probe job added per type (a
+# persisted dedup, a winners aggregate, a validity check) or one
+# inference job per read pushes it past this.
+MIXED_BATCH_MAX_JOBS = 17
 
 
 # Inner-resource payloads the pipeline's id-only validity flag must
@@ -739,15 +743,9 @@ def test_mixed_batch_job_count(spark, pipeline, monkeypatch):
         return real_persist(df, *args, **kwargs)
 
     monkeypatch.setattr(DataFrame, "persist", persist)
-    sc = spark.sparkContext
-    group = "test-mixed-batch-job-count"
-    sc.setJobGroup(group, "mixed batch")
-    try:
+    with jobs_in(spark) as jobs:
         pipeline.process_batch(batch(spark, rows), batch_id=2)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    n_jobs = len(jobs)
     # the batch did its work
     ids = {
         rt: sorted(r["id"] for r in pipeline.table(rt).to_df().collect())

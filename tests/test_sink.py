@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import types as T
 
 from fhir_to_lakehouse_spark.sinks.keyed_table import KeyedTable
+from tests.conftest import jobs_in
 
 SCHEMA = T.StructType(
     [
@@ -79,15 +82,9 @@ def test_optimize_on_compact_table_runs_no_job(spark, tmp_path):
     t.optimize()
     assert t.detail()["numFiles"] == 1
     before = os.stat(os.path.join(t.path, "_SUCCESS"))
-    sc = spark.sparkContext
-    group = "test-optimize-compact-noop"
-    sc.setJobGroup(group, "optimize a compact table")
-    try:
+    with jobs_in(spark) as jobs:
         t.optimize()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert jobs == []
     after = os.stat(os.path.join(t.path, "_SUCCESS"))
     assert (after.st_ino, after.st_mtime_ns) == (before.st_ino, before.st_mtime_ns)
     assert t.to_df().count() == 100
@@ -277,3 +274,96 @@ def test_known_empty_fast_path_revalidates_on_disk(spark, tmp_path):
     a.merge_upsert(df(spark, [("y", 2)]))
     got = {(r["id"], r["v"]) for r in a.to_df().collect()}
     assert got == {("x", 1), ("y", 2)}
+
+
+def test_reads_after_writes_run_no_job(spark, tmp_path):
+    """to_df() of the table this instance just wrote passes the schema
+    the write recorded: after an optimize, a merge and a delete it runs
+    no Spark job (inferring the schema from a file footer is one)."""
+    t = make(spark, tmp_path)
+
+    def read_back():
+        with jobs_in(spark) as jobs:
+            out = t.to_df()
+        assert jobs == []
+        return {r["id"]: r["v"] for r in out.collect()}
+
+    t.merge_upsert(df(spark, [("a", 1), ("b", 2), ("c", 3)]).repartition(2))
+    assert t.detail()["numFiles"] == 2
+    t.optimize()
+    assert t.detail()["numFiles"] == 1
+    assert read_back() == {"a": 1, "b": 2, "c": 3}
+    t.merge_upsert(df(spark, [("b", 20), ("d", 4)]))
+    assert read_back() == {"a": 1, "b": 20, "c": 3, "d": 4}
+    t.merge_delete(df(spark, [("a", 0)]).select("id"))
+    assert read_back() == {"b": 20, "c": 3, "d": 4}
+
+
+@pytest.mark.parametrize("extensions", [False, True], ids=["plain", "extensions"])
+@pytest.mark.parametrize(
+    "resource_type", ["Patient", "Observation", "Condition", "Encounter"]
+)
+def test_recorded_schema_is_the_inferred_one(
+    spark, tmp_path, resource_type, extensions
+):
+    """The schema a write records is exactly what Spark infers from the
+    files it wrote, for the curated encodings the pipeline stores:
+    after create, first write, optimize, merge and delete."""
+    from fhir_to_lakehouse_spark.operators.bundles import encode_resources
+
+    def encoded(ids, parts=1):
+        rows = [
+            (
+                json.dumps(
+                    {
+                        "resourceType": resource_type,
+                        "id": i,
+                        "extension": [{"url": "http://x", "valueString": i}],
+                    }
+                ),
+            )
+            for i in ids
+        ]
+        return encode_resources(
+            spark.createDataFrame(rows, "resource string").repartition(parts),
+            resource_type,
+            include_extensions=extensions,
+        )
+
+    t = make(spark, tmp_path)
+
+    def check():
+        assert t._known is not None
+        assert t._known[1] == spark.read.parquet(t.path).schema
+
+    t.create_if_not_exists(encoded([]).schema)
+    check()
+    t.merge_upsert(encoded(["a", "b", "c"], parts=2))
+    check()
+    assert t.detail()["numFiles"] == 2
+    t.optimize()
+    assert t.detail()["numFiles"] == 1
+    check()
+    t.merge_upsert(encoded(["b", "d"]))
+    check()
+    t.merge_delete(spark.createDataFrame([("a",)], "id string"))
+    check()
+    assert sorted(r["id"] for r in t.to_df().collect()) == ["b", "c", "d"]
+
+
+def test_table_replaced_by_another_writer_is_read_with_its_schema(
+    spark, tmp_path
+):
+    """A second instance's merge replaces the table with a wider one:
+    the first instance sees a new stamp and infers the new schema
+    instead of reading with the one it recorded."""
+    a = make(spark, tmp_path)
+    a.merge_upsert(df(spark, [("a", 1)]))
+    assert a.to_df().columns == ["id", "v"]
+    b = KeyedTable(spark, a.path, key="id")
+    b.merge_upsert(
+        spark.createDataFrame([("b", 2, "x")], "id string, v int, extra string")
+    )
+    got = a.to_df()
+    assert got.columns == ["id", "v", "extra"]
+    assert {tuple(r) for r in got.collect()} == {("a", 1, None), ("b", 2, "x")}

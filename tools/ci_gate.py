@@ -13,7 +13,8 @@ round's FIRST commit can re-establish them before any new work:
 3. the bundle-pipeline truth table (the reference's conflict-
    resolution goldens + encoder round-trips), the stream's
    crash-recovery replays and the keyed-table sink goldens (merge,
-   delete, file-count target, compaction, swap recovery);
+   delete, file-count target, compaction, swap recovery, the recorded
+   read-back schema);
 4. the bench harness: bench.py still emits its one JSON line (tail
    contract included) when an entry fails, and a headline and an
    end-to-end entry carry the same per-entry record.
