@@ -36,7 +36,13 @@ import re
 from pyspark.sql import SparkSession
 
 from fhir_to_lakehouse_spark.session import delta_available, get_spark
-from fhir_to_lakehouse_spark.sinks.keyed_table import KeyedTable
+from fhir_to_lakehouse_spark.sinks.keyed_table import (
+    RETENTION_FLOOR_HOURS,
+    KeyedTable,
+    SwapDir,
+    check_retention,
+    is_remote,
+)
 
 
 def discover_tables(
@@ -138,16 +144,8 @@ def vacuum_all_deltars(
     import deltalake
 
     if retention_hours is None:
-        retention_hours = KeyedTable.RETENTION_FLOOR_HOURS
-    if (
-        enforce_retention_duration
-        and retention_hours < KeyedTable.RETENTION_FLOOR_HOURS
-    ):
-        raise ValueError(
-            f"retention {retention_hours} h is below the "
-            f"{KeyedTable.RETENTION_FLOOR_HOURS} h retention floor; pass "
-            "enforce_retention_duration=False to override"
-        )
+        retention_hours = RETENTION_FLOOR_HOURS
+    check_retention(retention_hours, enforce_retention_duration)
     out = []
     for path, is_delta in _deltars_tables(warehouse_dir):
         if not is_delta:
@@ -212,23 +210,12 @@ def vacuum_all(
     --retention-hours 1`` fails identically with and without
     ``--no-dry-run`` instead of passing silently and then raising."""
     if retention_hours is None:
-        retention_hours = KeyedTable.RETENTION_FLOOR_HOURS
-    if (
-        enforce_retention_duration
-        and retention_hours < KeyedTable.RETENTION_FLOOR_HOURS
-    ):
-        raise ValueError(
-            f"retention {retention_hours} h is below the "
-            f"{KeyedTable.RETENTION_FLOOR_HOURS} h retention floor; pass "
-            "enforce_retention_duration=False to override"
-        )
+        retention_hours = RETENTION_FLOOR_HOURS
+    check_retention(retention_hours, enforce_retention_duration)
     done = []
     for path in discover_tables(warehouse_dir, spark):
-        if not dry_run:
-            KeyedTable(spark, path).vacuum(
-                retention_hours,
-                enforce_retention_duration=enforce_retention_duration,
-            )
+        if not dry_run:  # the floor was checked above
+            KeyedTable(spark, path).vacuum(retention_hours)
         done.append(path)
     return done
 
@@ -357,7 +344,10 @@ def create_views(
     against the view still get filter pushdown into the underlying
     scan. ``materialize_dir`` instead writes each view out as parquet
     (the scheduled-refresh flat-view handoff shape: analysts read the
-    flat table, never the resource encoding)."""
+    flat table, never the resource encoding), published by the keyed
+    table's copy-on-write swap so a reader never sees a partial view.
+    The swap renames through the local filesystem: a remote
+    ``materialize_dir`` (``s3a://``) is overwritten in place instead."""
     import json as _json
 
     from fhir_to_lakehouse_spark.operators.view_definition import compile_view
@@ -381,7 +371,10 @@ def create_views(
         name = vd.get("name") or f"{rtype.lower()}_view"
         if materialize_dir is not None:
             dest = os.path.join(materialize_dir, name)
-            df.write.mode("overwrite").parquet(dest)
+            if is_remote(dest):
+                df.write.mode("overwrite").parquet(dest)
+            else:
+                SwapDir(dest).publish(df)
             out.append(f"{name} -> {dest}")
         else:
             df.createOrReplaceTempView(name)

@@ -9,7 +9,7 @@ so foreachBatch decides when to execute.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fhir_to_lakehouse_spark.schemas import (
@@ -68,11 +68,7 @@ def prepare_stream(df: DataFrame) -> DataFrame:
     return explode_entries(parse_bundles(df))
 
 
-def latest_per_key(
-    df: DataFrame,
-    key: str = "request_url",
-    order: list | None = None,
-) -> DataFrame:
+def latest_per_key(df: DataFrame, key: str = "request_url") -> DataFrame:
     """Last-writer-wins dedup (W1): keep the single latest event per key.
 
     Ordering parity with /root/reference/src/bundle_processor.py:114-128:
@@ -81,7 +77,7 @@ def latest_per_key(
     order). This resolves PUT/DELETE races inside a batch; cross-batch
     correctness comes from merge idempotency.
 
-    Scale: the default ordering runs as ``min_by`` over the rank struct
+    Scale: the ordering runs as ``min_by`` over the rank struct
     (partition, -offset) — an aggregate, not a window. The partial
     aggregate collapses each key's rows map-side before the Exchange,
     so a hot key (one resource updated millions of times in a batch)
@@ -92,17 +88,7 @@ def latest_per_key(
     the row_number window form (whose WindowGroupLimit pushdown also
     limits map-side on Spark 3.5+), with a narrower sort key and no
     rank column materialized.
-
-    A custom ``order`` falls back to the row_number window (arbitrary
-    Column expressions don't map mechanically onto a min_by rank).
     """
-    if order is not None:
-        w = Window.partitionBy(key).orderBy(*order)
-        return (
-            df.withColumn("row_num", F.row_number().over(w))
-            .filter(F.col("row_num") == 1)
-            .drop("row_num")
-        )
     # (partition ASC, offset DESC) first row == argmin of the rank
     # struct (partition, -offset); struct comparison is lexicographic.
     # Kafka guarantees (partition, offset) uniqueness, so no ties.

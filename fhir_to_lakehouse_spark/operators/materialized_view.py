@@ -13,14 +13,16 @@ under forEach). That makes the maintenance delta-shaped:
 1. read changes since the last refreshed version — O(delta), the
    changelog is partitioned by commit_version so old commits are
    partition-pruned;
-2. fold to the latest post-image per changed resource key (deletes
-   drop out) — these rows carry the full encoded columns, so the
-   SOURCE TABLE IS NEVER SCANNED during a refresh;
+2. fold to the latest post-image per changed resource key
+   (``KeyedTable.latest_changes``; deletes drop out) — these rows
+   carry the full encoded columns, so the SOURCE TABLE IS NEVER
+   SCANNED during a refresh;
 3. compile the view over just those rows;
 4. swap the changed keys' row-groups in the materialization:
-   anti-join out the changed keys, append the recompiled rows, write
-   atomically (tmp dir + rename, the same crash-safe pattern as the
-   KeyedTable parquet fallback).
+   anti-join out the changed keys, append the recompiled rows, and
+   publish the result through ``SwapDir``, the keyed table's own
+   copy-on-write directory (tmp dir + rename, stranded-copy recovery,
+   reads with the recorded schema).
 
 Step 4 rewrites the materialization file set — that is the parquet
 fallback's cost, same as every fallback merge. On the Delta backend
@@ -47,7 +49,7 @@ from fhir_to_lakehouse_spark.operators.view_definition import (
     ViewCompileError,
     compile_view,
 )
-from fhir_to_lakehouse_spark.sinks.keyed_table import KeyedTable
+from fhir_to_lakehouse_spark.sinks.keyed_table import KeyedTable, SwapDir
 
 
 def _resource_key_column(view: dict) -> str:
@@ -78,7 +80,8 @@ class MaterializedFlatView:
         self.spark = source.spark
         self.path = path
         self.key_col = _resource_key_column(view)
-        self._recover_stranded()
+        self._dir = SwapDir(path)
+        self._dir.recover()
 
     # -- state -----------------------------------------------------------
 
@@ -99,49 +102,9 @@ class MaterializedFlatView:
         os.replace(tmp, self._meta_path())
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        return self._dir.read(self.spark)
 
     # -- refresh ---------------------------------------------------------
-
-    def _write_atomic(self, df: DataFrame) -> None:
-        """tmp dir + rename: a failed refresh leaves the old
-        materialization intact (same pattern as the KeyedTable
-        fallback's _swap_write). If the swap-in fails the old
-        directory is renamed straight back; if the process dies
-        between the two renames, the constructor's stranded-dir
-        recovery (parquet's _SUCCESS marker proves completeness)
-        restores it on next use."""
-        import shutil
-
-        parent = os.path.dirname(self.path.rstrip("/")) or "."
-        base = os.path.basename(self.path.rstrip("/"))
-        tmp = os.path.join(parent, f"{base}.tmp-{uuid.uuid4().hex}")
-        df.write.parquet(tmp)
-        if os.path.exists(self.path):
-            old = os.path.join(parent, f"{base}.tmp-old-{uuid.uuid4().hex}")
-            os.rename(self.path, old)
-            try:
-                os.rename(tmp, self.path)
-            except BaseException:
-                os.rename(old, self.path)
-                raise
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.rename(tmp, self.path)
-
-    def _recover_stranded(self) -> None:
-        parent = os.path.dirname(self.path.rstrip("/")) or "."
-        base = os.path.basename(self.path.rstrip("/"))
-        if os.path.exists(self.path) or not os.path.isdir(parent):
-            return
-        stranded = [
-            os.path.join(parent, d)
-            for d in os.listdir(parent)
-            if d.startswith(f"{base}.tmp-old-")
-            and os.path.exists(os.path.join(parent, d, "_SUCCESS"))
-        ]
-        if stranded:
-            os.rename(max(stranded, key=os.path.getmtime), self.path)
 
     def refresh(self) -> dict:
         """Bring the materialization up to the source's current
@@ -150,9 +113,8 @@ class MaterializedFlatView:
         recompiled. Returns refresh stats."""
         v_now = self.source.changelog_version()
         v_last = self.last_refreshed_version()
-        if not os.path.exists(self.path) or v_last < 0:
-            full = compile_view(self.view, self.source.to_df())
-            self._write_atomic(full)
+        if not self._dir.exists() or v_last < 0:
+            self._dir.publish(compile_view(self.view, self.source.to_df()))
             self._commit_version(v_now)
             return {
                 "mode": "full",
@@ -168,35 +130,18 @@ class MaterializedFlatView:
                 "resources": 0,
             }
 
-        changes = self.source.table_changes(v_last + 1).filter(
-            F.col("_change_type") != "update_preimage"
-        )
-        key = self.source.key
-        data_cols = [c for c in changes.columns if c != "commit_version"]
-        latest = (
-            changes.groupBy(key)
-            .agg(
-                F.max_by(
-                    F.struct(*[F.col(c) for c in data_cols]),
-                    F.col("commit_version"),
-                ).alias("w")
-            )
-            .select("w.*")
-        )
-        latest = latest.persist()
+        latest = self.source.latest_changes(since=v_last + 1).persist()
         try:
             n_changed = latest.count()
             survivors = latest.filter(
                 F.col("_change_type") != "delete"
             ).drop("_change_type")
             recompiled = compile_view(self.view, survivors)
-            changed_keys = latest.select(
-                F.col(key).alias(self.key_col)
-            ).distinct()
+            changed_keys = latest.select(F.col(self.source.key).alias(self.key_col))
             kept = self.read().join(
                 F.broadcast(changed_keys), self.key_col, "left_anti"
             )
-            self._write_atomic(kept.unionByName(recompiled))
+            self._dir.publish(kept.unionByName(recompiled))
         finally:
             latest.unpersist()
         self._commit_version(v_now)

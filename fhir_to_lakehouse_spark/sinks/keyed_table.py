@@ -27,15 +27,17 @@ Two backends behind one API:
   rewriting only the key buckets a batch touches is ROADMAP item 4,
   and it pays only once a table is many split-sized files.
 
-Write atomicity in the fallback: write to ``<path>.tmp-<n>`` then swap
-directories, so a reader never sees a half-written table.
-
-Reads in the fallback skip parquet schema inference (a Spark job per
-``spark.read.parquet``) while the table on disk is the one this
-instance last wrote or read: every write records the schema it wrote
-under the ``_SUCCESS`` marker's stamp, and a read whose stamp matches
-passes that schema to the reader. A table another writer replaced has
-a new stamp, so its schema is inferred once and recorded again.
+Every write in the fallback goes through one directory protocol,
+:class:`SwapDir`, which the materialized flat views and
+``maintenance create-view --materialize`` publish through as well:
+write to ``<path>.tmp-<n>`` then swap directories, so a reader never
+sees a half-written table. Reads through it skip parquet schema
+inference (a Spark job per ``spark.read.parquet``) while the table on
+disk is the one it last wrote or read: every publish records the
+schema it wrote under the ``_SUCCESS`` marker's stamp, and a read
+whose stamp matches passes that schema to the reader. A table another
+writer replaced has a new stamp, so its schema is inferred once and
+recorded again.
 """
 
 from __future__ import annotations
@@ -82,6 +84,158 @@ def _stamp(os_path: str) -> tuple[int, int] | None:
     except OSError:
         return None
     return st.st_mtime_ns, st.st_ino
+
+
+def is_remote(path: str) -> bool:
+    """True for a URI with a scheme other than ``file:`` (``s3a://``,
+    ``hdfs://``): Spark reaches it through Hadoop, ``os.*`` cannot."""
+    return bool(re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", path)) and not (
+        path.startswith("file:")
+    )
+
+
+class SwapDir:
+    """A parquet directory at ``path`` replaced whole by copy-on-write.
+
+    :meth:`publish` writes ``<path>.tmp-<n>``, renames the old directory
+    to ``<path>.tmp-old-<n>`` and the new one to ``path``, then drops the
+    old one: readers see the old or the new table, never a partial
+    write. A crash between the two renames leaves ``path`` absent with
+    the last complete copy in a ``.tmp-old-*`` sibling, which
+    :meth:`recover` (run by :meth:`exists` and :meth:`sweep`) renames
+    back, so no committed rows are lost.
+
+    ``recorded`` is ``(stamp, schema)`` of the table as this object last
+    wrote or read it; :meth:`read` passes that schema to the reader while
+    the ``_SUCCESS`` stamp on disk matches, and runs no inference job."""
+
+    def __init__(self, path: str):
+        # swaps and sweeps run through os.*, which needs a plain
+        # filesystem path: on a remote URI Spark would stage the write
+        # in the store and the rename would then find nothing to move
+        if is_remote(path):
+            raise ValueError(
+                f"{path!r} is not a local path: the copy-on-write swap "
+                "renames through the local filesystem"
+            )
+        self.path = path
+        # Spark accepts the URI form unchanged. Hadoop renders local
+        # URIs as both file:///p and file:/p: strip either
+        self.os_path = path.rstrip("/")
+        if path.startswith("file:"):
+            self.os_path = "/" + self.os_path.removeprefix("file:").lstrip("/")
+        self.recorded: tuple[tuple[int, int], T.StructType] | None = None
+
+    def stamp(self) -> tuple[int, int] | None:
+        return _stamp(self.os_path)
+
+    def exists(self) -> bool:
+        self.recover()
+        return os.path.exists(os.path.join(self.os_path, "_SUCCESS"))
+
+    def recover(self) -> None:
+        """Restore the newest complete ``.tmp-old-*`` copy when ``path``
+        is missing. Without this, a crash inside :meth:`publish` would
+        make the table look absent, and the next write would silently
+        discard every pre-existing row."""
+        if os.path.exists(self.os_path):
+            return
+        parent, base = os.path.split(self.os_path)
+        if not os.path.isdir(parent):
+            return
+        stranded = [
+            os.path.join(parent, d)
+            for d in os.listdir(parent)
+            if d.startswith(f"{base}.tmp-old-")
+            and os.path.exists(os.path.join(parent, d, "_SUCCESS"))
+        ]
+        if stranded:
+            os.rename(max(stranded, key=os.path.getmtime), self.os_path)
+
+    def read(self, session: SparkSession) -> DataFrame:
+        """The table, read through ``session``. With a matching stamp
+        the recorded schema is passed to the reader: no inference job.
+        Otherwise the schema is inferred (one job) and recorded under
+        the stamp taken BEFORE the read, so a table replaced during it
+        is inferred again next time instead of trusted."""
+        stamp, known = self.stamp(), self.recorded
+        if known is not None and known[0] == stamp:
+            return session.read.schema(known[1]).parquet(self.path)
+        df = session.read.parquet(self.path)
+        if stamp is not None:
+            self.recorded = (stamp, df.schema)
+        return df
+
+    def publish(self, df: DataFrame) -> None:
+        """Write ``df`` as the new table and swap it in. If the swap-in
+        rename fails, the old table is renamed straight back and the
+        staged copy dropped before the error propagates."""
+        suffix = f".tmp-{uuid.uuid4().hex[:8]}"
+        df.write.mode("overwrite").parquet(f"{self.path.rstrip('/')}{suffix}")
+        tmp = f"{self.os_path}{suffix}"
+        # stamped before the swap: the renames keep it, and a table
+        # another writer swaps in after ours never carries it
+        stamp = _stamp(tmp)
+        old = None
+        if os.path.exists(self.os_path):
+            old = f"{self.os_path}.tmp-old-{uuid.uuid4().hex[:8]}"
+            os.rename(self.os_path, old)
+        try:
+            os.rename(tmp, self.os_path)
+        except BaseException:
+            if old is not None:
+                os.rename(old, self.os_path)
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        if old is not None:
+            shutil.rmtree(old, ignore_errors=True)
+        # the parquet writer stores every field nullable
+        self.recorded = None if stamp is None else (stamp, _nullable(df.schema))
+
+    def files(self) -> tuple[int, int]:
+        """Number and total bytes of the table's parquet files on disk;
+        (0, 0) when there is no table directory."""
+        try:
+            with os.scandir(self.os_path) as entries:
+                sizes = [
+                    e.stat().st_size for e in entries if e.name.endswith(".parquet")
+                ]
+        except OSError:
+            return 0, 0
+        return len(sizes), sum(sizes)
+
+    def sweep(self, retention_hours: float) -> None:
+        """Remove ``.tmp-*`` leftovers older than ``retention_hours``,
+        after :meth:`recover`: while ``path`` is missing, the newest
+        ``.tmp-old-*`` sibling IS the table, not garbage."""
+        self.recover()
+        parent, base = os.path.split(self.os_path)
+        if not os.path.isdir(parent):
+            return
+        cutoff = time.time() - retention_hours * 3600
+        for d in os.listdir(parent):
+            full = os.path.join(parent, d)
+            if d.startswith(f"{base}.tmp-") and os.path.getmtime(full) < cutoff:
+                shutil.rmtree(full, ignore_errors=True)
+
+
+# Delta's default deletedFileRetentionDuration: 1 week
+RETENTION_FLOOR_HOURS = 168.0
+
+
+def check_retention(retention_hours: float, enforce: bool) -> None:
+    """The reference lakehousekeeper guard (its
+    lakehousekeeper.py:121-127, Delta's retentionDurationCheck): with
+    ``enforce`` on, a retention below the 1-week floor is rejected.
+    Vacuuming a window shorter than the longest-running reader
+    permanently breaks its snapshot."""
+    if enforce and retention_hours < RETENTION_FLOOR_HOURS:
+        raise ValueError(
+            f"retention {retention_hours} h is below the "
+            f"{RETENTION_FLOOR_HOURS} h retention floor; pass "
+            "enforce_retention_duration=False (CLI: "
+            "--no-enforce-retention-duration) to override"
+        )
 
 
 class DuplicateKeySourceError(ValueError):
@@ -165,28 +319,20 @@ class KeyedTable:
     ):
         self.spark = spark
         self.path = path
-        # the fallback's directory swaps/sweeps run through os.*, which
-        # needs a plain filesystem path; Spark reads/writes accept the
-        # URI form unchanged. Hadoop renders local URIs as both
-        # file:///p and file:/p — strip either. Other schemes (s3a://)
-        # have no parquet fallback — they require the Delta backend.
-        self._os_path = path
-        if path.startswith("file:"):
-            self._os_path = "/" + path.removeprefix("file:").lstrip("/")
         self.key = key
         self._delta = delta_available() and not os.environ.get("FORCE_PARQUET_SINK")
-        # enforce the comment above: on a remote scheme without Delta,
+        # other schemes (s3a://) have no parquet fallback: without Delta,
         # exists() would os.path.exists("s3a://...") == False forever —
         # merge_delete no-ops and every merge rewrites an "initial"
         # table. Fail construction instead of corrupting silently.
-        if not self._delta and re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", path) and not (
-            path.startswith("file:")
-        ):
+        if not self._delta and is_remote(path):
             raise ValueError(
                 f"KeyedTable parquet fallback only supports local paths; "
                 f"{path!r} needs the Delta backend (delta-spark on the "
                 f"classpath)"
             )
+        # the fallback's table directory; a Delta table has none
+        self._dir = None if self._delta else SwapDir(path)
         # fallback merge guard: reject duplicate-key sources like Delta
         # MERGE would. Callers that provably dedup first (the pipeline's
         # latest_per_key) may disable to skip the probe job.
@@ -195,16 +341,12 @@ class KeyedTable:
         # merge also appends its row-level changes (_change_type +
         # commit_version) to <path>.changelog for incremental consumers
         self.changelog = changelog
-        # (stamp, schema) of the fallback table as this instance last
-        # wrote or read it; a read whose stamp matches skips schema
-        # inference (_read)
-        self._known: tuple[tuple[int, int], T.StructType] | None = None
-        # the known table is the ZERO-ROW one create_if_not_exists
-        # wrote: while its stamp holds, the next merge_upsert takes the
+        # stamp of the ZERO-ROW table create_if_not_exists wrote: while
+        # it is the one on disk, the next merge_upsert takes the
         # initial-write fast path instead of reading the empty table
         # back through the full anti-join/union machinery (a first
         # batch on a fresh warehouse pays that per resource type)
-        self._known_empty = False
+        self._empty_stamp: tuple[int, int] | None = None
         self.table_properties = (
             dict(table_properties)
             if table_properties is not None
@@ -215,63 +357,18 @@ class KeyedTable:
 
     def _fresh_empty(self) -> bool:
         """True only while the zero-row table THIS instance created is
-        still what's on disk. The in-memory flag alone is not enough:
-        another KeyedTable instance (or process) writing to the same
-        path after our create_if_not_exists would be silently clobbered
-        by the fast-path _swap_write; its write gives the table a new
-        stamp."""
-        known = self._known
-        return (
-            self._known_empty
-            and known is not None
-            and known[0] == _stamp(self._os_path)
-        )
-
-    def _read(self, session: SparkSession) -> DataFrame:
-        """The fallback table, read through ``session``. While the
-        stamp on disk is the one this instance recorded, the recorded
-        schema is passed to the reader: no inference job. Otherwise the
-        schema is inferred (one job) and recorded under the stamp taken
-        BEFORE the read, so a table replaced during it is inferred
-        again next time instead of trusted with the old stamp."""
-        stamp, known = _stamp(self._os_path), self._known
-        if known is not None and known[0] == stamp:
-            return session.read.schema(known[1]).parquet(self.path)
-        df = session.read.parquet(self.path)
-        if stamp is not None:
-            self._known, self._known_empty = (stamp, df.schema), False
-        return df
+        still what's on disk: another KeyedTable instance (or process)
+        writing to the same path after our create_if_not_exists would
+        otherwise be silently clobbered by the fast-path _swap_write;
+        its write gives the table a new stamp."""
+        return self._empty_stamp is not None and self._empty_stamp == self._dir.stamp()
 
     def exists(self) -> bool:
         if self._delta:
             from delta.tables import DeltaTable
 
             return DeltaTable.isDeltaTable(self.spark, self.path)
-        self._recover_stranded()
-        return os.path.exists(os.path.join(self._os_path, "_SUCCESS"))
-
-    def _recover_stranded(self) -> None:
-        """Crash recovery for the fallback swap: a failure between
-        rename(path -> old) and rename(tmp -> path) leaves no table at
-        ``path`` while the pre-swap data sits in a ``.tmp-old-*``
-        sibling. Without recovery, exists() would report False and the
-        next merge would silently discard every pre-existing row.
-        Restore the newest complete stranded copy before answering any
-        existence/read question."""
-        if os.path.exists(self._os_path):
-            return
-        parent, base = os.path.split(self._os_path.rstrip("/"))
-        if not os.path.isdir(parent):
-            return
-        stranded = [
-            os.path.join(parent, d)
-            for d in os.listdir(parent)
-            if d.startswith(f"{base}.tmp-old-")
-            and os.path.exists(os.path.join(parent, d, "_SUCCESS"))
-        ]
-        if stranded:
-            newest = max(stranded, key=os.path.getmtime)
-            os.rename(newest, self._os_path)
+        return self._dir.exists()
 
     def to_df(self) -> DataFrame:
         """Read back (reference S8: DeltaTable.forPath(...).toDF())."""
@@ -279,7 +376,7 @@ class KeyedTable:
             from delta.tables import DeltaTable
 
             return DeltaTable.forPath(self.spark, self.path).toDF()
-        return self._read(self.spark)
+        return self._dir.read(self.spark)
 
     # -- DDL -------------------------------------------------------------
 
@@ -309,12 +406,11 @@ class KeyedTable:
             # default-parallelism partitions and the commit protocol
             # pays per-task setup for dozens of empty writers (~2 s on
             # local[32] for a zero-row table; one task is ~0.4 s)
-            empty = self.spark.createDataFrame([], schema)
-            empty.repartition(1).write.mode("overwrite").parquet(self.path)
-            stamp = _stamp(self._os_path)
-            if stamp is not None:  # no marker: no fast path, reads infer
-                self._known = (stamp, _nullable(empty.schema))
-                self._known_empty = True
+            self._dir.publish(self.spark.createDataFrame([], schema).repartition(1))
+            # the stamp publish took before its renames: a table another
+            # writer swaps in after ours never carries it
+            recorded = self._dir.recorded
+            self._empty_stamp = recorded[0] if recorded else None
 
     # -- MERGE -----------------------------------------------------------
 
@@ -373,7 +469,7 @@ class KeyedTable:
         # the first post-create merge). Executing the whole merge in
         # the caller's session is also simply correct — its confs are
         # the ones in force for this batch.
-        existing = self._read(src.sparkSession)
+        existing = self._dir.read(src.sparkSession)
         if self.changelog:
             matched_keys = src.select(self.key).distinct()
             pre = existing.join(matched_keys, on=self.key, how="left_semi")
@@ -417,7 +513,7 @@ class KeyedTable:
         if not self.exists():
             return
         # the ids' session, like merge_upsert's read of the table
-        existing = self._read(ids.sparkSession)
+        existing = self._dir.read(ids.sparkSession)
         if self.changelog:
             deleted = existing.join(
                 ids.select(F.col(id_col).alias(self.key)),
@@ -498,7 +594,7 @@ class KeyedTable:
                 target_files or 1, zkey
             ).sortWithinPartitions(zkey)
         else:
-            n_files, n_bytes = self._files()
+            n_files, n_bytes = self._dir.files()
             target = target_files or self._target_files(self.spark, n_bytes)
             if n_files <= target:
                 return
@@ -548,9 +644,6 @@ class KeyedTable:
             )
         return morton_key(ordinals, bits)
 
-    # Delta's default deletedFileRetentionDuration: 1 week
-    RETENTION_FLOOR_HOURS = 168.0
-
     def vacuum(
         self,
         retention_hours: float = 24.0,
@@ -560,39 +653,18 @@ class KeyedTable:
         /root/reference/src/bundle_processor.py:321). Fallback: clear
         leftover tmp dirs older than retention.
 
-        ``enforce_retention_duration`` mirrors the reference
-        lakehousekeeper guard (/root/reference/src/lakehousekeeper.py:
-        121-127 / Delta's retentionDurationCheck): when on, a retention
-        below the 1-week floor is rejected — vacuuming a window shorter
-        than the longest-running reader permanently breaks its
-        snapshot. Default off here because the reference app itself
-        disables the check session-wide (src/main.py:71); the
-        maintenance CLI turns it on by default like the reference CLI.
+        ``enforce_retention_duration`` applies :func:`check_retention`.
+        Default off here because the reference app itself disables the
+        check session-wide (src/main.py:71); the maintenance CLI turns
+        it on by default like the reference CLI.
         """
-        if enforce_retention_duration and retention_hours < self.RETENTION_FLOOR_HOURS:
-            raise ValueError(
-                f"retention_hours={retention_hours} is below the "
-                f"{self.RETENTION_FLOOR_HOURS} h retention floor; pass "
-                f"enforce_retention_duration=False (CLI: "
-                f"--no-enforce-retention-duration) to override"
-            )
+        check_retention(retention_hours, enforce_retention_duration)
         if self._delta:
             from delta.tables import DeltaTable
 
             DeltaTable.forPath(self.spark, self.path).vacuum(retention_hours)
             return
-        # recover before sweeping: if the table path is missing, the
-        # newest .tmp-old-* sibling IS the table, not garbage
-        self._recover_stranded()
-        parent, base = os.path.split(self._os_path.rstrip("/"))
-        if not os.path.isdir(parent):
-            return
-        cutoff = time.time() - retention_hours * 3600
-        for d in os.listdir(parent):
-            if d.startswith(f"{base}.tmp-") and os.path.getmtime(
-                os.path.join(parent, d)
-            ) < cutoff:
-                shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
+        self._dir.sweep(retention_hours)
 
     def detail(self) -> dict:
         """Table metadata (reference S15 delta_table.detail())."""
@@ -610,7 +682,7 @@ class KeyedTable:
                 .toJSON()
                 .collect()[0]
             )
-        n_files = self._files()[0] if self.exists() else 0
+        n_files = self._dir.files()[0] if self.exists() else 0
         return {"location": self.path, "numFiles": n_files, "format": "parquet"}
 
     # -- change data feed (fallback analog of Delta CDF) -----------------
@@ -620,8 +692,11 @@ class KeyedTable:
         return f"{self.path.rstrip('/')}.changelog"
 
     def changelog_version(self) -> int:
-        """Latest committed change version, -1 if none."""
-        base = f"{self._os_path.rstrip('/')}.changelog"
+        """Latest committed change version, -1 if none. The Delta
+        backend writes no change log of its own (its CDF is Delta's)."""
+        if self._dir is None:
+            return -1
+        base = f"{self._dir.os_path}.changelog"
         if not os.path.isdir(base):
             return -1
         versions = [
@@ -653,64 +728,46 @@ class KeyedTable:
         )
         return df.filter(F.col("commit_version") >= starting_version)
 
+    def latest_changes(self, since: int = 0, until: int | None = None) -> DataFrame:
+        """The change feed folded to one row per key: the key's latest
+        change among commits ``since``..``until`` (inclusive; None is
+        the newest), pre-images excluded — its post-image with
+        ``_change_type`` (insert, update_postimage or delete), without
+        ``commit_version``. One hot-key-safe aggregate (max_by
+        commit_version per key, the W1 dedup shape) over the pruned
+        changelog partitions: O(changed rows) regardless of table size.
+        """
+        ch = self.table_changes(since).filter(
+            F.col("_change_type") != "update_preimage"
+        )
+        if until is not None:
+            ch = ch.filter(F.col("commit_version") <= until)
+        cols = [c for c in ch.columns if c != "commit_version"]
+        return (
+            ch.groupBy(self.key)
+            .agg(F.max_by(F.struct(*cols), F.col("commit_version")).alias("w"))
+            .select("w.*")
+        )
+
     def upserted_since(self, starting_version: int) -> DataFrame:
         """Incremental read off the change feed: the latest post-image
         of every key whose most recent change AT OR AFTER
         ``starting_version`` is not a delete — the Bulk Data `_since`
-        export primitive (and any downstream incremental consumer's
-        pull). One hot-key-safe grouped max_by over the pruned
-        changelog partitions (commit_version >= N), O(changed rows)
-        regardless of table size — the same aggregate shape as the W1
-        dedup rewrite. Keys created-then-deleted inside the window
+        export primitive. Keys created-then-deleted inside the window
         surface as nothing, matching what a full re-export would show.
         """
-        ch = self.table_changes(starting_version).filter(
-            F.col("_change_type") != "update_preimage"
-        )
-        data_cols = [
-            c
-            for c in ch.columns
-            if c not in ("_change_type", "commit_version")
-        ]
-        latest = ch.groupBy(self.key).agg(
-            F.max(
-                F.struct(
-                    F.col("commit_version"),
-                    F.col("_change_type").alias("__ct"),
-                    F.struct(*data_cols).alias("__row"),
-                )
-            ).alias("m")
-        )
-        return latest.filter(F.col("m.__ct") != "delete").select("m.__row.*")
+        latest = self.latest_changes(since=starting_version)
+        return latest.filter(F.col("_change_type") != "delete").drop("_change_type")
 
     def as_of(self, version: int) -> DataFrame:
         """Time-travel read: the table state as of changelog commit
-        ``version`` (inclusive) — the ``VERSION AS OF`` analog,
-        reconstructed by folding the change feed distributedly (one
-        hash aggregate: max_by commit_version per key, then drop
-        deletes). Partition pruning on commit_version bounds the read
-        to versions <= ``version``. Requires ``changelog=True``."""
+        ``version`` (inclusive) — the ``VERSION AS OF`` analog: the
+        change feed up to ``version`` folded by :meth:`latest_changes`,
+        deletes dropped. Requires ``changelog=True``."""
         if not self.changelog:
             raise ValueError("as_of requires changelog=True on this table")
-        effects = (
-            self.table_changes(0)
-            .filter(F.col("commit_version") <= version)
-            .filter(F.col("_change_type") != "update_preimage")
-        )
-        data_cols = [c for c in effects.columns if c != "commit_version"]
-        latest = (
-            effects.groupBy(self.key)
-            .agg(
-                F.max_by(
-                    F.struct(*[F.col(c) for c in data_cols]),
-                    F.col("commit_version"),
-                ).alias("w")
-            )
-            .select("w.*")
-        )
-        return latest.filter(F.col("_change_type") != "delete").drop(
-            "_change_type"
-        )
+        latest = self.latest_changes(until=version)
+        return latest.filter(F.col("_change_type") != "delete").drop("_change_type")
 
     def restore_to(self, version: int) -> None:
         """``RESTORE TABLE ... TO VERSION`` analog: rewrite the table to
@@ -761,18 +818,6 @@ class KeyedTable:
 
     # -- internals -------------------------------------------------------
 
-    def _files(self) -> tuple[int, int]:
-        """Number and total bytes of the table's parquet files on disk;
-        (0, 0) when there is no table directory."""
-        try:
-            with os.scandir(self._os_path) as entries:
-                sizes = [
-                    e.stat().st_size for e in entries if e.name.endswith(".parquet")
-                ]
-        except OSError:
-            return 0, 0
-        return len(sizes), sum(sizes)
-
     @staticmethod
     def _target_files(spark: SparkSession, n_bytes: int) -> int:
         """File-count target for ``n_bytes`` of parquet:
@@ -800,12 +845,7 @@ class KeyedTable:
         return df.repartition(n)
 
     def _swap_write(self, df: DataFrame, presorted: bool = False) -> None:
-        """Copy-on-write directory swap. Readers see the old or the new
-        table, never a partial write. The swap itself is two renames,
-        so a crash between them can leave ``path`` momentarily absent —
-        :meth:`_recover_stranded` (run by exists()/vacuum()) restores
-        the pre-swap directory in that window, so no committed rows are
-        ever lost.
+        """Copy-on-write rewrite, published by :meth:`SwapDir.publish`.
 
         Unless the caller lays the files out itself (``presorted``),
         each file is sorted by key, and a rewrite of an existing table
@@ -817,7 +857,7 @@ class KeyedTable:
         about. The whole table is still rewritten; bucketed partial
         rewrite is ROADMAP item 4."""
         if not presorted:
-            n_files, n_bytes = self._files()
+            n_files, n_bytes = self._dir.files()
             if n_files and not self._fresh_empty():  # not a first write
                 df = self._right_size(df, n_bytes)
             if self.key in df.columns:
@@ -826,18 +866,5 @@ class KeyedTable:
                 # file-level key index, so a point lookup still opens every
                 # file of the table; only Delta's data skipping prunes files
                 df = df.sortWithinPartitions(self.key)
-        suffix = f".tmp-{uuid.uuid4().hex[:8]}"
-        # Spark writes via the URI form; the renames below are plain
-        # filesystem moves on the local equivalent
-        df.write.mode("overwrite").parquet(f"{self.path.rstrip('/')}{suffix}")
-        tmp_os = f"{self._os_path.rstrip('/')}{suffix}"
-        # stamped before the swap: the renames keep it, and a table
-        # another writer swaps in after ours never carries it
-        stamp = _stamp(tmp_os)
-        old = f"{self._os_path.rstrip('/')}.tmp-old-{uuid.uuid4().hex[:8]}"
-        if os.path.exists(self._os_path):
-            os.rename(self._os_path, old)
-        os.rename(tmp_os, self._os_path)
-        shutil.rmtree(old, ignore_errors=True)
-        self._known = None if stamp is None else (stamp, _nullable(df.schema))
-        self._known_empty = False
+        self._dir.publish(df)
+        self._empty_stamp = None

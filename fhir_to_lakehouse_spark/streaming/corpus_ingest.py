@@ -12,10 +12,10 @@ Exactly-once economics: appends are NOT transactional here (plain
 parquet), but the pipeline is REPLAY-IDEMPOTENT by construction —
 a re-delivered batch's fingerprints already sit in the index, so the
 anti-join admits nothing the second time (verified in
-tests/test_corpus_ingest.py). The worst case after a crash between the
-two appends is a fingerprint row without its document, which
-under-admits never double-admits; on Delta the two appends become one
-txn.
+tests/test_corpus_ingest.py). The index is appended BEFORE the
+documents, so the worst case after a crash between the two appends is
+a fingerprint row without its document, which under-admits, never
+double-admits; on Delta the two appends become one txn.
 
 Scale shape: the in-batch first-occurrence pick is a min_by hash
 aggregate on the fingerprint (hot-key safe, no window sort); the
@@ -34,6 +34,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fhir_to_lakehouse_spark.functions.cache import (
+    persist_scope,
+    scoped_local_checkpoint,
+)
 from fhir_to_lakehouse_spark.functions.text import fingerprint
 
 
@@ -46,7 +50,7 @@ class CorpusIngestConfig:
 
 class IncrementalDedupIngest:
     """foreachBatch corpus ingest: batch -> in-batch first-occurrence
-    -> anti-join vs the fingerprint index -> append docs + index."""
+    -> anti-join vs the fingerprint index -> append index, then docs."""
 
     def __init__(self, spark: SparkSession, config: CorpusIngestConfig):
         self.spark = spark
@@ -76,17 +80,20 @@ class IncrementalDedupIngest:
         known = self._known_fingerprints()
         if known is not None:
             first = first.join(known, "fp", "left_anti")
-        # make the admitted set stable across the two appends
-        first = first.persist()
-        try:
-            first.select(*cols).write.mode("append").parquet(
-                self.config.corpus_dir
-            )
+        # index first: a crash before the documents land leaves their
+        # fingerprints known, so a replay under-admits, never
+        # double-admits. The admitted set is pinned by a local
+        # checkpoint, not persist(): appending to the index re-caches
+        # every cached plan that reads it, which would re-run the
+        # anti-join against the new fingerprints and admit nothing
+        with persist_scope():
+            first = scoped_local_checkpoint(first, eager=False)
             first.select("fp").write.mode("append").parquet(
                 self.config.fingerprint_dir
             )
-        finally:
-            first.unpersist()
+            first.select(*cols).write.mode("append").parquet(
+                self.config.corpus_dir
+            )
 
     # -- shell --------------------------------------------------------
 

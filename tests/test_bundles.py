@@ -404,7 +404,7 @@ def test_all_invalid_batch_writes_no_table_file(spark, pipeline):
     def snapshot():
         out = {}
         for rt in ("Patient", "Observation"):
-            path = pipeline.table(rt)._os_path
+            path = pipeline.table(rt)._dir.os_path
             st = os.stat(os.path.join(path, "_SUCCESS"))
             out[rt] = (sorted(os.listdir(path)), st.st_ino, st.st_mtime_ns)
         return out

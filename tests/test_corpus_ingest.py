@@ -51,6 +51,31 @@ def test_replay_is_idempotent(spark, ingest):
     assert before == after
 
 
+def test_crash_between_appends_never_double_admits(spark, ingest, monkeypatch):
+    """A batch whose second append fails, then replayed, admits no
+    document twice: the first append must be the fingerprint index."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    ingest.process_batch(_mk(spark, [(0, "zero", "en")]), 0)
+    real_parquet = DataFrameWriter.parquet
+    calls = []
+
+    def second_append_fails(self, path, *args, **kwargs):
+        calls.append(path)
+        if len(calls) == 2:
+            raise OSError("simulated crash between the two appends")
+        return real_parquet(self, path, *args, **kwargs)
+
+    b1 = _mk(spark, [(1, "alpha", "en"), (2, "beta", "en")])
+    monkeypatch.setattr(DataFrameWriter, "parquet", second_append_fails)
+    with pytest.raises(OSError, match="simulated"):
+        ingest.process_batch(b1, 1)
+    monkeypatch.undo()
+    ingest.process_batch(b1, 1)  # the replay after the crash
+    ids = [r["doc_id"] for r in ingest.admitted().collect()]
+    assert len(ids) == len(set(ids)), sorted(ids)
+
+
 def test_streaming_shell_end_to_end(spark, ingest, tmp_path):
     src = str(tmp_path / "src")
     _mk(

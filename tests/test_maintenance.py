@@ -338,6 +338,39 @@ def test_create_views_temp_and_materialized(spark, tmp_path):
         assert "Observation" in str(e)
 
 
+def test_create_views_remote_dest_overwrites_in_place(
+    spark, tmp_path, monkeypatch
+):
+    """A remote --materialize dest cannot go through the local-rename
+    swap: the view is written straight to ``dest`` with a plain
+    overwrite, so no ``.tmp-*`` staged copy is left in the store."""
+    import json
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    wh = tmp_path / "wh"
+    KeyedTable(spark, str(wh / "Patient.parquet")).merge_upsert(
+        spark.createDataFrame([("p1",)], "id string")
+    )
+    vp = tmp_path / "v.json"
+    vp.write_text(
+        json.dumps(
+            {
+                "name": "v",
+                "resource": "Patient",
+                "select": [{"column": [{"name": "pid", "path": "id"}]}],
+            }
+        )
+    )
+    written = []
+    monkeypatch.setattr(
+        DataFrameWriter, "parquet", lambda self, path, *a, **k: written.append(path)
+    )
+    out = M.create_views(spark, str(wh), [str(vp)], "s3a://bucket/views")
+    assert written == ["s3a://bucket/views/v"]
+    assert out == ["v -> s3a://bucket/views/v"]
+
+
 def test_export_bulk_roundtrip(spark, tmp_path):
     """maintenance export writes each stored resource table as per-type
     NDJSON that reads back byte-identically through read_bulk_export;

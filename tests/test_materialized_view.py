@@ -18,6 +18,7 @@ from fhir_to_lakehouse_spark.operators.view_definition import (
     compile_view,
 )
 from fhir_to_lakehouse_spark.sinks.keyed_table import KeyedTable
+from tests.conftest import jobs_in
 
 VIEW = {
     "name": "patient_flat",
@@ -117,6 +118,22 @@ def test_refresh_never_scans_source_table(spark, tmp_path, monkeypatch):
     stats = mv.refresh()
     assert stats["resources"] == 1
     assert ("p9", "male", "A") in _rows(mv.read())
+
+
+def test_read_after_refresh_runs_no_job(spark, tmp_path):
+    """read() of the materialization a refresh just published passes
+    the schema the publish recorded: no schema-inference job."""
+    src = KeyedTable(spark, str(tmp_path / "Patient.parquet"), changelog=True)
+    src.merge_upsert(_enc(spark, [_patient("p1"), _patient("p2", "male")]))
+    mv = MaterializedFlatView(VIEW, src, str(tmp_path / "v"))
+    mv.refresh()
+    src.merge_upsert(_enc(spark, [_patient("p1", "other")]))
+    assert mv.refresh()["mode"] == "incremental"
+    with jobs_in(spark) as jobs:
+        out = mv.read()
+    assert jobs == []
+    assert out.schema == spark.read.parquet(mv.path).schema
+    assert _rows(out) == _rows(compile_view(VIEW, src.to_df()))
 
 
 def test_guardrails(spark, tmp_path):

@@ -215,6 +215,30 @@ def test_vacuum_does_not_sweep_stranded_table(spark, tmp_path):
     assert t.to_df().count() == 1
 
 
+def test_failed_swap_in_keeps_old_table(spark, tmp_path, monkeypatch):
+    """A merge whose swap-in rename fails renames the old table straight
+    back and drops its staged copy: the old table stays at ``path``,
+    complete, with no ``.tmp-*`` sibling left behind."""
+    import os
+
+    t = make(spark, tmp_path)
+    t.merge_upsert(df(spark, [("a", 1)]))
+    real_rename = os.rename
+
+    def failing_rename(a, b):
+        if ".tmp-" in a and ".tmp-old-" not in a and b == t.path:
+            raise OSError("simulated swap-in failure")
+        return real_rename(a, b)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(OSError, match="simulated"):
+        t.merge_upsert(df(spark, [("a", 2), ("b", 3)]))
+    monkeypatch.undo()
+    assert os.path.exists(os.path.join(t.path, "_SUCCESS"))
+    assert not [d for d in os.listdir(tmp_path) if ".tmp-" in d]
+    assert {r["id"]: r["v"] for r in t.to_df().collect()} == {"a": 1}
+
+
 def test_retry_skips_deterministic_errors(spark, tmp_path):
     """AnalysisException/validation errors must fail fast, not burn the
     5-attempt backoff re-running a deterministic failure."""
@@ -257,9 +281,33 @@ def test_fallback_rejects_remote_scheme(spark):
     KeyedTable(spark, "file:/tmp/t.parquet")
 
 
+def test_swap_dir_rejects_remote_uri():
+    """The copy-on-write swap renames through the local filesystem: a
+    remote URI is refused up front, before Spark stages a write in the
+    store that no rename could then move or clean up."""
+    from fhir_to_lakehouse_spark.sinks.keyed_table import SwapDir
+
+    with pytest.raises(ValueError, match="not a local path"):
+        SwapDir("s3a://bucket/views/v")
+    assert SwapDir("file:///tmp/v/").os_path == "/tmp/v"
+    assert SwapDir("file:/tmp/v").os_path == "/tmp/v"
+
+
+def test_delta_table_at_remote_uri_has_no_swap_dir(spark, monkeypatch):
+    """With the Delta backend a remote table is constructed without the
+    fallback's directory, and reports no fallback change log."""
+    from fhir_to_lakehouse_spark.sinks import keyed_table
+
+    monkeypatch.setattr(keyed_table, "delta_available", lambda: True)
+    monkeypatch.delenv("FORCE_PARQUET_SINK", raising=False)
+    t = KeyedTable(spark, "s3a://bucket/Patient.parquet")
+    assert t._dir is None
+    assert t.changelog_version() == -1
+
+
 def test_known_empty_fast_path_revalidates_on_disk(spark, tmp_path):
     """The initial-write fast path must not trust the in-memory
-    _known_empty flag blindly (ADVICE r12): a second writer to the
+    record of the empty table blindly (ADVICE r12): a second writer to the
     same path after our create_if_not_exists would be clobbered by
     the fast-path swap. The _SUCCESS stamp check detects the foreign
     write and falls back to the full anti-join merge."""
@@ -333,8 +381,8 @@ def test_recorded_schema_is_the_inferred_one(
     t = make(spark, tmp_path)
 
     def check():
-        assert t._known is not None
-        assert t._known[1] == spark.read.parquet(t.path).schema
+        assert t._dir.recorded is not None
+        assert t._dir.recorded[1] == spark.read.parquet(t.path).schema
 
     t.create_if_not_exists(encoded([]).schema)
     check()

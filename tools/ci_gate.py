@@ -1,7 +1,7 @@
 """One-command fast invariant gate (VERDICT r4 item 8).
 
-Runs the four checks that prove the library's core invariants (four
-to six minutes on a 4-core host, about three for --fast), so every
+Runs the four checks that prove the library's core invariants (about
+eight minutes on a shared 4-core host, four and a half for --fast), so every
 round's FIRST commit can re-establish them before any new work:
 
 1. full oracle harness at sf0.001 (every registered query vs its
@@ -12,9 +12,10 @@ round's FIRST commit can re-establish them before any new work:
    view's Filter);
 3. the bundle-pipeline truth table (the reference's conflict-
    resolution goldens + encoder round-trips), the stream's
-   crash-recovery replays and the keyed-table sink goldens (merge,
+   crash-recovery replays, the keyed-table sink goldens (merge,
    delete, file-count target, compaction, swap recovery, the recorded
-   read-back schema);
+   read-back schema), the change feed and its fold, and the
+   materialized views that publish through the same swap;
 4. the bench harness: bench.py still emits its one JSON line (tail
    contract included) when an entry fails, and a headline and an
    end-to-end entry carry the same per-entry record.
@@ -61,6 +62,8 @@ STAGES = [
             "tests/test_encoder_widened.py",
             "tests/test_crash_recovery_stream.py",
             "tests/test_sink.py",
+            "tests/test_materialized_view.py",
+            "tests/test_changelog.py",
             "-q",
         ],
     ),
